@@ -14,11 +14,20 @@ hints. Partition pruning and columnar scans come from Catalyst/Parquet;
 append-only ingest is ``mode("append")``; delete-by-partition is a
 directory remove — identical lifecycle, zero custom storage.
 
+The declared schema is the read contract, as the tag attributes are in
+hustle: every write (``append``, ``compact``) projects onto it, and
+every read of a managed table hands it to Spark
+(``spark.read.schema``), so no read launches a schema-inference job and
+the partition column keeps its declared type instead of one Spark
+guesses from directory names. Only tables without a sidecar — bare
+``<name>.parquet`` files and foreign directories — are inferred.
+
 Scale notes: at 100 TB the catalog dir sits on HDFS/S3; everything here
 is path manipulation + Spark reads, so nothing changes. Indexed columns
 (``index`` spec prefix) get Parquet bloom filters + a sort within
 partitions at write time — the analogue of hustle's EWAH bitmap
-indexes, enabling row-group skip on point predicates.
+indexes, enabling row-group skip on point predicates. Compaction is one
+read, one shuffle and one write however many partitions a table has.
 """
 
 from __future__ import annotations
@@ -26,7 +35,9 @@ from __future__ import annotations
 import json
 import shutil
 import uuid
+from collections import Counter
 from pathlib import Path
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +46,30 @@ from .schema import TableSchema
 from .table import Table
 
 SCHEMA_FILE = "_hustle_schema.json"
+
+
+def conform(df: DataFrame, schema: TableSchema) -> DataFrame:
+    """Project onto the declared schema: drop unknown columns, cast
+    declared ones, fill declared-but-absent columns with typed NULLs so
+    every written file carries the complete table schema in a
+    consistent order — the files then hold exactly the types the
+    declared-schema reads trust. The partition column must be PRESENT:
+    NULL-filling it would silently route every row to
+    __HIVE_DEFAULT_PARTITION__ and corrupt the delete-by-partition
+    lifecycle."""
+    present = set(df.columns)
+    if schema.partition and schema.partition not in present:
+        raise ValueError(
+            f"write into {schema.name!r}: partition column "
+            f"{schema.partition!r} missing from input"
+        )
+    return df.select(
+        *[
+            (df[f.name].cast(f.dataType) if f.name in present
+             else F.lit(None).cast(f.dataType)).alias(f.name)
+            for f in schema.to_struct().fields
+        ]
+    )
 
 
 def _nanos_timestamp_columns(path: Path) -> list[str]:
@@ -60,6 +95,22 @@ def _nanos_timestamp_columns(path: Path) -> list[str]:
         if pa.types.is_timestamp(t) and t.unit == "ns":
             out.append(field_.name)
     return out
+
+
+def _indexed(schema: TableSchema) -> list[str]:
+    """Indexed data columns (the partition column is a directory)."""
+    return [c for c in schema.indexed_columns if c != schema.partition]
+
+
+def _writer(df: DataFrame, schema: TableSchema | None, indexed: list[str], mode: str):
+    """Parquet writer with a bloom filter per indexed column and the
+    hive layout of a partitioned table."""
+    writer = df.write.mode(mode)
+    for c in indexed:
+        writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
+    if schema is not None and schema.partition:
+        writer = writer.partitionBy(schema.partition)
+    return writer
 
 
 class Catalog:
@@ -110,15 +161,10 @@ class Catalog:
         if name in self._cache:
             return self._cache[name]
         path, schema = self._resolve(name)
-        if (
-            schema is not None
-            and path.is_dir()
-            and not any(path.rglob("*.parquet"))
-        ):
-            # created but never written: empty relation from the
-            # declared schema (a freshly-created hustle table is
-            # queryable before its first insert)
-            df = self.spark.createDataFrame([], schema.to_struct())
+        if schema is not None:
+            # declared schema: no inference job, and a table created
+            # but never written reads as an empty relation
+            df = self.spark.read.schema(schema.to_struct()).parquet(str(path))
         else:
             df = self._read_parquet(path)
         t = Table(name, df, schema=schema, catalog=self)
@@ -237,10 +283,7 @@ class Catalog:
             raise ValueError(f"table {name!r} already exists")
         dir_path.mkdir(parents=True)
         (dir_path / SCHEMA_FILE).write_text(json.dumps(schema.to_json_dict(), indent=2))
-        empty = self.spark.createDataFrame([], schema.to_struct())
-        t = Table(name, empty, schema=schema, catalog=self)
-        self._cache[name] = t
-        return t
+        return self.table(name)
 
     def drop(self, name: str) -> None:
         """Reference ``drop(table)`` — remove table + data."""
@@ -281,21 +324,19 @@ class Catalog:
     # ---- write paths ----
 
     def append(self, name: str, df: DataFrame) -> None:
-        """Append a DataFrame into a managed table (the marble push)."""
+        """Append a DataFrame into a managed table (the marble push).
+        A declared table receives ``df`` projected onto its schema
+        (:func:`conform`)."""
         path, schema = self._resolve(name)
-        writer = df.write.mode("append")
+        indexed: list[str] = []
         if schema is not None:
-            indexed = [c for c in schema.indexed_columns if c != schema.partition]
+            df = conform(df, schema)
+            indexed = _indexed(schema)
             if indexed:
                 # sort + bloom filter per indexed column ~= hustle's
                 # per-value bitmap index
                 df = df.sortWithinPartitions(*indexed)
-                writer = df.write.mode("append")
-                for c in indexed:
-                    writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
-            if schema.partition:
-                writer = writer.partitionBy(schema.partition)
-        writer.parquet(str(path))
+        _writer(df, schema, indexed, "append").parquet(str(path))
         self._cache.pop(name, None)
 
     def compact(self, name: str, target_file_mb: int = 128) -> int:
@@ -306,11 +347,22 @@ class Catalog:
         task (the 100 TB analogue of the reference's marble GC).
         Returns the number of data files after compaction.
 
-        Partitioned tables keep their hive layout (files coalesce
-        within each partition). Index options are preserved: indexed
-        columns are re-sorted within partitions and bloom filters are
-        re-written, so compaction also repairs sort/bloom locality lost
-        to many small appends.
+        One read (by the declared schema when the table has one), one
+        shuffle and one write, however many partitions the table has:
+        the cost is a fixed number of Spark jobs, parallel across
+        partitions. Each hive partition is sized from its own file
+        bytes: it gets a salt range of ``ceil(partition_bytes /
+        target)`` and the shuffle is keyed on (partition value, salt),
+        so a hot partition larger than the target still splits into
+        several files while a small one lands in exactly one.
+        File-count bound: a partition ends with at least one and at
+        most ``ceil(partition_bytes / target)`` files — fewer when two
+        of its salts hash to the same shuffle partition. An
+        unpartitioned table is dealt round-robin into
+        ``ceil(table_bytes / target)`` files. Index options are
+        preserved: each file is sorted on the indexed columns and bloom
+        filters are re-written, so compaction also repairs sort/bloom
+        locality lost to many small appends.
 
         Single-writer, single-process semantics (the engine's
         append-only model has no concurrent writers): the rewrite lands
@@ -331,66 +383,75 @@ class Catalog:
         self._recover_orphans(name, path)
         if not path.is_dir():
             raise ValueError(f"table {name!r} is not a managed directory table")
-        data_files = [p for p in path.rglob("*.parquet")]
+        # the files Spark reads: hidden paths (a crashed write's
+        # ``_temporary``) are skipped as the reader skips them
+        data_files = [
+            p for p in path.rglob("*.parquet")
+            if not any(s.startswith(("_", ".")) for s in p.relative_to(path).parts)
+        ]
         if not data_files:
             return 0
         target_bytes = target_file_mb * 1024 * 1024
         staging = path.parent / f"_{name}.compact.{uuid.uuid4().hex[:8]}"
-        indexed = (
-            [c for c in schema.indexed_columns if c != schema.partition]
-            if schema is not None
-            else []
-        )
-
-        def write_coalesced(df: DataFrame, nbytes: int, dst: Path) -> None:
-            n_out = max(1, -(-nbytes // target_bytes))
-            out = df.repartition(int(n_out))
-            if indexed:
-                out = out.sortWithinPartitions(*indexed)
-            writer = out.write.mode("overwrite")
-            for c in indexed:
-                writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
-            writer.parquet(str(dst))
-
-        if schema is not None and schema.partition:
-            stray = sorted(p.name for p in path.glob("*.parquet"))
+        if schema is None:
+            # raw read of a foreign table: compaction must rewrite
+            # BYTES-equivalent data. Going through _read_parquet would
+            # bake its read-time conversions (nanos->micros, NTZ->LTZ)
+            # into the files — silently changing on-disk types. A
+            # foreign nanos table fails loudly here instead of being
+            # lossily rewritten.
+            read = self.spark.read
+            part, indexed = None, []
+        else:
+            read = self.spark.read.schema(schema.to_struct())
+            part, indexed = schema.partition, _indexed(schema)
+        if part:
+            prefix = f"{part}="
+            part_bytes: Counter = Counter()
+            stray = []
+            for p in data_files:
+                top, *rest = p.relative_to(path).parts
+                if rest and top.startswith(prefix):
+                    part_bytes[unquote(top[len(prefix):])] += p.stat().st_size
+                else:
+                    stray.append(str(p.relative_to(path)))
             if stray:
-                # a foreign/manual write left data files at the table
-                # root; the per-partition copy below would silently
+                # a foreign/manual write left data files outside the
+                # hive layout; the partitioned rewrite would silently
                 # drop them and the trash removal would destroy them
+                stray.sort()
                 raise ValueError(
                     f"partitioned table {name!r} has non-hive data files "
-                    f"at its root ({stray[:3]}{'...' if len(stray) > 3 else ''}); "
+                    f"({stray[:3]}{'...' if len(stray) > 3 else ''}); "
                     "refusing to compact — move them into a "
-                    f"{schema.partition}=<value>/ directory first"
+                    f"{prefix}<value>/ directory first"
                 )
-            # size each hive partition independently: a hot partition
-            # larger than the target still splits into multiple files
-            # (a single repartition(n, part_col) would collapse every
-            # value into one task = one arbitrarily large file), and at
-            # cluster scale each partition is its own bounded job
-            staging.mkdir(parents=True)
-            for pdir in sorted(path.iterdir()):
-                if not pdir.is_dir() or "=" not in pdir.name:
-                    continue
-                pbytes = sum(p.stat().st_size for p in pdir.rglob("*.parquet"))
-                if pbytes == 0:
-                    continue
-                write_coalesced(
-                    self.spark.read.parquet(str(pdir)), pbytes, staging / pdir.name
+            salts = {v: max(1, -(-b // target_bytes)) for v, b in part_bytes.items()}
+            # only partitions over the target need a salt; the map is
+            # looked up per row, so it holds just those
+            hot = {v: n for v, n in salts.items() if n > 1}
+            salt = F.lit(0)
+            if hot:
+                n_salt = F.create_map(*[F.lit(x) for kv in hot.items() for x in kv])
+                salt = F.pmod(
+                    F.monotonically_increasing_id(),
+                    F.coalesce(n_salt[F.col(part).cast("string")], F.lit(1)),
                 )
+            out = (
+                read.parquet(str(path))
+                .withColumn("__salt", salt)
+                .repartition(sum(salts.values()), part, "__salt")
+                .drop("__salt")
+            )
         else:
             total_bytes = sum(p.stat().st_size for p in data_files)
-            # raw read, matching the partitioned branch: compaction must
-            # rewrite BYTES-equivalent data. Going through table(name).df
-            # would bake its read-time conversions (nanos->micros,
-            # NTZ->LTZ) into the files — silently changing on-disk types
-            # of foreign-written tables. Engine-written tables are
-            # already micros; a foreign nanos table now fails loudly
-            # here instead of being lossily rewritten.
-            write_coalesced(
-                self.spark.read.parquet(str(path)), total_bytes, staging
-            )
+            out = read.parquet(str(path)).repartition(max(1, -(-total_bytes // target_bytes)))
+        # the partition column leads so the hive writer needs no sort
+        # of its own, which would not keep the indexed order
+        order = ([part] if part else []) + indexed
+        if order:
+            out = out.sortWithinPartitions(*order)
+        _writer(out, schema, indexed, "overwrite").parquet(str(staging))
         # carry the schema sidecar, then swap dirs
         sidecar = path / SCHEMA_FILE
         if sidecar.exists():
@@ -421,7 +482,8 @@ class Catalog:
         if out.exists():
             shutil.rmtree(out)
         df.write.mode("overwrite").parquet(str(out))
-        t = Table(name, self.spark.read.parquet(str(out)), catalog=self)
+        # read back by the schema just written: no inference job
+        t = Table(name, self.spark.read.schema(df.schema).parquet(str(out)), catalog=self)
         self._cache[name] = t
         return t
 

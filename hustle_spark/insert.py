@@ -30,7 +30,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .catalog import Catalog
+from .catalog import Catalog, conform
 
 
 def insert(
@@ -48,40 +48,17 @@ def insert(
     (the reference accepted open file streams here).
     ``preprocess``: DataFrame -> DataFrame hook, run before the write —
     the distributed analogue of the reference's per-row hook. Its
-    output is re-coerced to the declared schema, so a hook that adds,
-    renames, or retypes columns cannot write schema-deviant files
-    (directory reads infer from one footer; a stray column would
-    appear or vanish nondeterministically).
+    output is re-coerced to the declared schema (``catalog.conform``),
+    so a hook that adds, renames, or retypes columns cannot write
+    files that disagree with the schema every read trusts.
     """
     path, schema = catalog._resolve(table)
     if schema is None:
         raise ValueError(f"insert target {table!r} has no declared hustle schema")
     struct = schema.to_struct()
 
-    def coerce(df: DataFrame, *, require_partition: bool) -> DataFrame:
-        """Project onto the declared schema: drop unknown columns, cast
-        declared ones, fill declared-but-absent columns with typed
-        NULLs so every appended file carries the complete table schema
-        in a consistent order. The partition column must be PRESENT —
-        NULL-filling it would silently route every row to
-        __HIVE_DEFAULT_PARTITION__ and corrupt the delete-by-partition
-        lifecycle."""
-        present = set(df.columns)
-        if require_partition and schema.partition and schema.partition not in present:
-            raise ValueError(
-                f"insert into {table!r}: partition column "
-                f"{schema.partition!r} missing from input"
-            )
-        return df.select(
-            *[
-                (df[f.name].cast(f.dataType) if f.name in present
-                 else F.lit(None).cast(f.dataType)).alias(f.name)
-                for f in struct.fields
-            ]
-        )
-
     if streams is not None:
-        df = coerce(streams, require_partition=True)
+        df = conform(streams, schema)
     elif phile is not None:
         if decoder == "json":
             df = catalog.spark.read.schema(struct).json(phile)
@@ -109,7 +86,7 @@ def insert(
         # the declared schema (partition presence re-checked — a hook
         # that drops the partition column gets the loud error, not
         # __HIVE_DEFAULT_PARTITION__ corruption)
-        df = coerce(preprocess(df), require_partition=True)
+        df = conform(preprocess(df), schema)
 
     obs = Observation()
     metrics = [F.count(F.lit(1)).alias("n")]

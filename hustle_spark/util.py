@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from urllib.parse import unquote, urlparse
+
 _UNIT_SECONDS = {
     "second": 1,
     "seconds": 1,
@@ -139,7 +141,16 @@ def spread_input(df, spark):
 # class as Spark's own file-listing cache, guide section 6), never
 # query results — reading a footer costs ~1 ms; the memo only avoids
 # re-stat()ing the same files across the many probe rows of one run.
+# Only successful reads are kept, so a transient failure costs one
+# fallback, not the rest of the session.
 _FOOTER_ROWS: dict = {}
+
+
+def _local_path(uri: str) -> str:
+    """Filesystem path of a ``file:`` URI (``file:/a`` or
+    ``file:///a``, percent-escapes decoded); other strings unchanged."""
+    parsed = urlparse(uri)
+    return unquote(parsed.path) if parsed.scheme == "file" else uri
 
 
 def stat_partitions(df, spark, rows_per_task: int = 512) -> int:
@@ -153,8 +164,8 @@ def stat_partitions(df, spark, rows_per_task: int = 512) -> int:
     parallelism — the honest version of the partition shrink r14
     declined as a bench-tuned constant. Row counts come from the
     parquet footers of ``df``'s input files, read driver-side (no
-    Spark job); any failure (non-parquet source, no files) falls back
-    to defaultParallelism, i.e. the old behavior."""
+    Spark job); any failure (non-parquet source, no files, unreadable
+    footer) falls back to defaultParallelism, i.e. the old behavior."""
     import math
 
     par = spark.sparkContext.defaultParallelism
@@ -170,13 +181,12 @@ def stat_partitions(df, spark, rows_per_task: int = 512) -> int:
             import pyarrow.parquet as pq
 
             n_rows = sum(
-                pq.ParquetFile(f[7:] if f.startswith("file://") else f)
-                .metadata.num_rows
+                pq.ParquetFile(_local_path(f)).metadata.num_rows
                 for f in files
                 if f.endswith(".parquet")
             )
-        except Exception:
-            n_rows = 0
+        except Exception:  # a sizing probe: never fail the query
+            return par
         _FOOTER_ROWS[files] = n_rows
     if not n_rows:
         return par

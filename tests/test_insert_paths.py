@@ -2,6 +2,8 @@
 
 import json
 
+import pytest
+
 from pyspark.sql import functions as F
 
 import hustle_spark as h
@@ -324,3 +326,91 @@ def test_insert_recoerce_after_preprocess(spark, tmp_path):
     t = cat.table("ev").df
     assert sorted(t.columns) == ["day", "k"]
     assert dict(t.dtypes)["k"] == "bigint"
+
+
+def test_append_projects_onto_declared_schema(spark, tmp_path):
+    """A direct append writes exactly the declared columns and types:
+    the extra column is dropped and the int lands as the declared
+    uint32 (bigint), which the declared-schema read then trusts."""
+    cat = h.connect(spark, tmp_path)
+    cat.create("ap", ["index string day", "uint32 n"], partition="day")
+    cat.append("ap", spark.createDataFrame(
+        [("d1", 5, "junk")], "day string, n int, extra string"))
+    df = cat.table("ap").df
+    assert sorted(df.dtypes) == [("day", "string"), ("n", "bigint")]
+    assert [tuple(r) for r in df.select("day", "n").collect()] == [("d1", 5)]
+    with pytest.raises(ValueError, match="partition column"):
+        cat.append("ap", spark.createDataFrame([(1,)], "n int"))
+
+
+def test_partition_column_keeps_declared_string_type(spark, tmp_path):
+    """A date-looking partition value declared ``string`` reads back as
+    a string, not as the DATE Spark would infer from the directory."""
+    from pyspark.sql import types as T
+
+    cat = h.connect(spark, tmp_path)
+    cat.create("t", ["index string date", "uint32 n"], partition="date")
+    cat.append("t", spark.createDataFrame([("2014-01-20", 1)], "date string, n long"))
+    df = cat.table("t").df
+    assert isinstance(df.schema["date"].dataType, T.StringType)
+    assert [r.date for r in df.collect()] == ["2014-01-20"]
+
+
+def test_compact_sizes_each_partition_from_its_bytes(spark, tmp_path):
+    """One partition over the target splits into several files, bounded
+    by ceil(bytes / target); each small partition becomes one file;
+    rows, partition values and types survive unchanged."""
+    import math
+
+    cat = h.connect(spark, tmp_path)
+    cat.create("sz", ["string p", "string h", "uint32 n"], partition="p")
+    for k in range(3):
+        cat.append("sz", spark.range(k * 20000, (k + 1) * 20000).select(
+            F.lit("big").alias("p"),
+            F.sha2(F.col("id").cast("string"), 256).alias("h"),
+            F.col("id").alias("n"),
+        ))
+    for p in ("s1", "s2"):
+        for n in range(2):
+            cat.append("sz", spark.createDataFrame([(p, "x", n)], "p string, h string, n long"))
+    target_mb = 1
+    big_bytes = sum(f.stat().st_size for f in (tmp_path / "sz" / "p=big").glob("*.parquet"))
+    assert big_bytes > target_mb * 2**20
+    before = cat.table("sz").df
+    dtypes, rows = before.dtypes, sorted(map(tuple, before.collect()))
+
+    cat.compact("sz", target_file_mb=target_mb)
+
+    def files(p):
+        return len(list((tmp_path / "sz" / f"p={p}").glob("*.parquet")))
+
+    assert 1 < files("big") <= math.ceil(big_bytes / (target_mb * 2**20))
+    assert files("s1") == files("s2") == 1
+    after = cat.table("sz").df
+    assert after.dtypes == dtypes
+    assert sorted(map(tuple, after.collect())) == rows
+    assert cat.partitions("sz") == ["big", "s1", "s2"]
+
+
+def test_compact_jobs_do_not_grow_with_partitions(spark, tmp_path):
+    """Compaction is one read, one shuffle and one write: the job count
+    is the same for 2 partitions as for 6."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def compact_jobs(n_parts):
+        cat = h.connect(spark, tmp_path / f"p{n_parts}")
+        cat.create("t", ["index string day", "uint32 n"], partition="day")
+        rows = [(f"d{i}", i) for i in range(n_parts)]
+        for _ in range(2):
+            cat.append("t", spark.createDataFrame(rows, "day string, n long"))
+        group = f"compact-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            assert cat.compact("t") == n_parts
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert compact_jobs(2) == compact_jobs(6)

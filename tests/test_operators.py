@@ -3546,6 +3546,33 @@ def test_release_frames_scoped(spark):
     util.release_cached()
 
 
+def test_stat_partitions_retries_a_failed_footer_read(tmp_path, monkeypatch):
+    """A footer read that fails once falls back to defaultParallelism
+    for that call only: the next call reads the footers (file: and
+    file:/// URIs alike) instead of reusing a memoized failure."""
+    from types import SimpleNamespace
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hustle_spark import util
+
+    path = tmp_path / "a b.parquet"
+    pq.write_table(pa.table({"x": list(range(1000))}), path)
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=8))
+    real = pq.ParquetFile
+    for uri in (f"file:{path}", f"file://{path}"):
+        df = SimpleNamespace(inputFiles=lambda uri=uri: [uri.replace(" ", "%20")])
+
+        def flaky(*a, **k):
+            raise OSError("transient")
+
+        monkeypatch.setattr(pq, "ParquetFile", flaky)
+        assert util.stat_partitions(df, spark) == 8
+        monkeypatch.setattr(pq, "ParquetFile", real)
+        assert util.stat_partitions(df, spark) == 2  # ceil(1000 / 512)
+
+
 def test_dsir_importance_null_and_empty_text(spark):
     """NULL / empty documents fold to one empty token and score like
     any raw doc; target docs never appear in the output."""
