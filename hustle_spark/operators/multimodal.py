@@ -1251,8 +1251,7 @@ def _wav_data_samples(payload: bytes):
     (sample_rate, samples as int64 ndarray), or None. Shared by the
     pitch and segmentation decoders; _audio_samples_one keeps its own
     pure-Python walk because its per-sample checksum loop predates
-    this helper and its driver row is registered (unify at the next
-    _CHANGED promotion)."""
+    this helper."""
     import numpy as np
 
     parsed = parse_wav_header(payload)

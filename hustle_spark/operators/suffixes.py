@@ -449,11 +449,13 @@ def repeated_substring_removal(
         # array — state bounded by one document, the HOF-work class),
         # so the one stats shuffle carries one row per (doc, distinct
         # gram) into a map-side-combined count — no corpus-wide
-        # hash-distinct state, no second exchange
+        # hash-distinct state, no second exchange. NULL-id documents
+        # count toward no gram's distinct-document total (the
+        # collect_set(id) semantics this count replaced)
         doc_grams = (
             spread_input(df, df.sparkSession)
             .select(F.col(id_col), t.alias("__t"))
-            .filter(F.length("__t") >= min_len)
+            .filter(F.col(id_col).isNotNull() & (F.length("__t") >= min_len))
             .select(
                 id_col,
                 F.explode(

@@ -21,7 +21,19 @@ mirror; EXT queries are the SURVEY's deliberate capability extensions.
 
 from __future__ import annotations
 
+import ast
+import dis
+import functools
+import hashlib
+import importlib
+import importlib.util
+import inspect
+import json
+import re
+import sys
+import types
 from dataclasses import dataclass
+from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -62,8 +74,6 @@ _catalogs: dict[tuple[int, str], h.Catalog] = {}
 def _cat(spark: SparkSession, sf_dir: str) -> h.Catalog:
     key = (id(spark), sf_dir)
     if key not in _catalogs:
-        import hashlib
-
         h.tune_existing(spark)
         # md5, NOT hash(): Python's hash is per-process randomized, so
         # the _SUCCESS-gated dump caches under scratch would never hit
@@ -6832,70 +6842,10 @@ QUERIES["lang_profiles_file_roundtrip"].oracle = (
 )
 
 
-@query(
-    "audio_vad_table_probe",
-    oracle=None,  # bound right after this definition (see below)
-)
-def audio_vad_table_probe(spark, sf_dir):
-    """L5a3 the VAD decision-table FILE seam driven under the oracle
-    gate (VERDICT r12 directive #6 made the WebRTC-VAD/Silero loader
-    executable; this row makes the driver PROVE loaded ≡ inline on
-    the gate fixtures): the speech/silence corpus of
-    audio_segments_probe is segmented with a LOADED 3-step energy
-    decision table ([(0, silence), (201, speech), (100000, silence)])
-    round-tripped through a real vad.tsv (dump_vad_decision_table /
-    load_vad_decision_table — strict: unsorted boundaries or labels
-    outside {0,1} fail at load). On this generative corpus the third
-    step is unreachable by construction (speech window abs-sums are
-    bounded at 4 x 1999 < 100000), so the table classifies exactly
-    like the inline ``sum > 200`` threshold and the oracle is the
-    audio_segments_probe replay verbatim plus the loaded step count —
-    a mis-parsed boundary or label flips a window class and
-    hash-mismatches. Scale shape: identical to audio_segments_probe
-    (map-only Arrow decode; the table ships in the closure)."""
-    from pathlib import Path
-
-    cat = _cat(spark, sf_dir)
-    path = Path(str(cat.scratch)) / "vad_table_roundtrip.tsv"
-    path.parent.mkdir(parents=True, exist_ok=True)
-    multimodal.dump_vad_decision_table(
-        [(0, 0), (201, 1), (100000, 0)], path
-    )
-    table = multimodal.load_vad_decision_table(path)
-    docs = cat.table("documents").df.select("doc_id")
-    # rows-per-task-aware sizing (util.stat_partitions, r15)
-    d = docs.repartition(_util.stat_partitions(docs, spark))
-    media = multimodal.synthesize_wav_speech_payloads(d, "doc_id")
-    feats = multimodal.decode_audio_segments(media, decision_table=table)
-    return feats.select(
-        "media_id", "media_type", "n_samples", "n_windows",
-        "n_segments", "n_speech_windows", "ok",
-    ).withColumn("n_steps_loaded", F.lit(len(table)).cast("bigint"))
-
-
-# The audio_segments_probe replay minus its 'recovered' audit column
-# (this row gates the LOADER, not the boundary-recovery property),
-# plus the loaded step count. Bound from the candidates module's
-# oracle constant at the flip import below — see the tail of this
-# file.
-
-
 # =====================================================================
-# round-8 wave-1 candidate flip
+# rows registered from round 8 on (their own module, same @query)
 # =====================================================================
-# The 17 FLIPPED_R8 pairs (hustle_spark/candidates.py) register into
-# QUERIES when the candidates module finishes importing — importing it
-# here is the flip. Registration is by reference: the staged (query,
-# oracle) pairs are lifted verbatim, exactly as the staging contract
-# and VERDICT r7 directive #1 specified; the code keeps its one home.
-from . import candidates as _candidates_flip  # noqa: E402, F401
-
-# audio_vad_table_probe's oracle (deferred from its definition above)
-# is bound at the TAIL of candidates.py — the only point that runs
-# after BOTH modules finish initializing in either import order (a
-# binding here reads candidates attributes that do not exist yet when
-# candidates is imported first and executes this module from its own
-# line 34).
+from . import candidates  # noqa: E402, F401
 
 
 # =====================================================================
@@ -6908,203 +6858,252 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # ---------------------------------------------------------------------
-# Driver-window ordering.  The correctness driver verifies exactly the
-# FIRST 50 entries of queries() in iteration order (round-1 evidence:
-# CORRECTNESS_r01.json keys == list(queries())[:50]).  Windows rotate
-# per round; docs/CHECKED.md is the manifest of which round proved what.
+# Driver-window ordering. The correctness driver verifies exactly the
+# first 50 entries of queries() (each CORRECTNESS_r*.json holds that
+# window), so the order is derived, never edited by hand:
 #
-# Sort invariant (VERDICT.md r2, "Next round" #1/#3): queries CHANGED
-# since their last driver row out-rank new-this-round ones, which
-# out-rank already-proven backfill.  The window is composed from the
-# explicit segments below so that adding a query automatically squeezes
-# a backfill slot out instead of silently landing at 51+ (the round-2
-# process bug).  tests/test_window_invariant.py enforces that any query
-# whose content hash differs from docs/query_hashes.json sits inside
-# the first 50.
+# 1. changed rows, in registration order: the row's content hash (the
+#    source of every hustle_spark function, class and module constant
+#    its function reaches, plus its oracle SQL) differs from
+#    docs/query_hashes.json or is missing from it;
+# 2. oracle-bound rows, stalest first: ordered by the newest
+#    CORRECTNESS_r*.json in which the row was green, ties by key order
+#    in that file;
+# 3. rows without an oracle.
 #
-# Round-5 rotation (VERDICT.md r4, "Next round" #2): the promised
-# near-pure rotation paying the r1/r2 staleness debt.  The r4 window
-# (21+16+13 per docs/CHECKED.md) went 49/50 green, so its _CHANGED/_NEW
-# drained into the proven pool; the backfill below re-proves the
-# STALEST green rows first — all 28 queries whose latest green driver
-# row is CORRECTNESS_r01 (computed from the four CORRECTNESS files;
-# the two by-design rows-only sketches dedup_minhash_lsh/dedup_simhash
-# stay out, their machinery is hash-checked via the r4-green md5
-# twins), then the r2-latest rows in CORRECTNESS_r02 key order.
-_WINDOW_SIZE = 50
+# scripts/update_query_hashes.py regenerates the manifest after a green
+# full oracle sweep; tests/test_window_invariant.py fails when more
+# changed rows exist than the window holds.
 
-# Changed since their last driver row (manual promotions — helper-level
-# edits do not move a registry function's content hash):
-_CHANGED = [
-    # r15 (optimization round 2): every row whose implementation moved —
-    # at the query function OR the operator module underneath it —
-    # rotates in so the driver re-proves the optimized code path.
-    # Query-source changes — roundtrip rows now pay their export every
-    # run (the _SUCCESS dump-cache closure, VERDICT r14 #7):
-    "orc_roundtrip_agg",
-    "jsonl_roundtrip_agg",
-    "csv_roundtrip_agg",
-    "insert_jsonl_requery",
-    # streaming multi-batch invariant made explicit (ADVICE r14 #3):
-    "streaming_curation_requery",
-    # frozen shared bm25 tf frame (freeze=True callers):
-    "retrieval_rrf_fusion",
-    "retrieval_bm25_rank_agreement",
-    # stats-derived partition sizing for the mapInPandas media decode
-    # family (util.stat_partitions — VERDICT r14 #5, all 18 sites):
-    "multimodal_jpeg_probe",
-    "multimodal_jpeg_color_probe",
-    "multimodal_jpeg_subsampled_probe",
-    "multimodal_jpeg_restart_probe",
-    "multimodal_jpeg_progressive_probe",
-    "multimodal_png_probe",
-    "multimodal_gif_probe",
-    "multimodal_tiff_probe",
-    "multimodal_image_ahash",
-    "multimodal_image_phash",
-    "multimodal_exif_probe",
-    "multimodal_video_scenes",
-    "audio_pitch_probe",
-    "audio_segments_probe",
-    "audio_vad_table_probe",
-    "audio_mp3_frames_probe",
-    "audio_mp3_sideinfo_probe",
-    "dedup_image_phash_groups",
-    # Operator-module changes the source hash cannot see:
-    # operators/suffixes.py de-skewed membership pass (VERDICT #1):
-    "dedup_substring_removal",
-    "dedup_substring_groups",
-    "dedup_exact_substr_combined",
-    # functions/text.py bpe_learn_merges one-action-per-round fusion
-    # (VERDICT #2):
-    "bpe_merge_rounds",
-    "bpe_tokenizer_roundtrip",
-    # operators/dedup.py connected_components e0 checkpoint release
-    # (ADVICE r14 #2) — direct + indirect CC consumers:
-    "dedup_cluster_cc",
-    "dedup_jaccard_clusters",
-    "dedup_pipeline_keepers",
-    "dedup_soft_weights_fuzzy",
-    # operators/similarity.py build_ivf_pq_index eager checkpoints
-    # (VERDICT #4):
-    "ann_ivf_pq_search",
-    "ann_ivf_pq_batched",
-    # operators/retrieval.py bm25_tf_frame gained the freeze seam
-    # (default-False path byte-equivalent, promoted on the r14
-    # module-change convention anyway):
-    "retrieval_bm25_topk",
-]
-
-# New queries registered this round — every addition goes here.
-# COUNT-SYNC RULE (ADVICE r6 #4): _window() asserts the three segments
-# sum to EXACTLY _WINDOW_SIZE, so adding an entry here requires moving
-# the last _BACKFILL entry to _QUEUED_NEXT in the same edit.
-#
-# r14 executes the CHECKED.md r14 rotation plan verbatim (VERDICT r13
-# directive #1): _NEW = the ENTIRE 3-row r13 staged pool — the pool
-# drains to ZERO again — plus any rows registered AT BIRTH this round
-# under the directive-#2 invariant. Backfill: the ENTIRE 36-row
-# r9-latest remainder (r13's _QUEUED_NEXT verbatim — after r14 no
-# oracle-bound row's newest driver check predates r10) plus the
-# oldest r10-latest rows in CORRECTNESS_r10 key order to the 50-fit;
-# the r10 remainder is QUEUED (not dropped) as the r15 backfill head.
-_NEW_THIS_ROUND = [
-    # r15 is an optimization round: no new query rows (the round's
-    # rule — no features beyond what an optimization needs).
-]
-
-# Already-proven entries, oldest driver row first, used to fill the
-# window back up to EXACTLY 50 — freshest re-confirmation of the
-# stalest rows. r14 drains the ENTIRE 36-row r9-latest remainder
-# (r13's _QUEUED_NEXT, verbatim — after this round no oracle-bound
-# row's newest driver check predates r10) plus the oldest r10-latest
-# rows in CORRECTNESS_r10 key order to the 50-fit. The two
-# by-design rows-only sketches dedup_minhash_lsh/dedup_simhash stay
-# OUT of backfill (test_window_priority_ordering: proven rows-only
-# entries never burn a window slot — their machineries are
-# hash-checked via the md5 twins, which rotate normally).
-_BACKFILL = [
-    # r15: 37 _CHANGED rows leave 13 backfill slots. Drain the
-    # _QUEUED_NEXT head in order (the r14-displaced r9 remainder) —
-    # skipping the queued rows that moved into _CHANGED themselves
-    # this round (retrieval_bm25_topk/_rank_agreement and the seven
-    # media rows, which get their fresh driver row via the head).
-    "time_tumbling_hour", "time_sliding_2h", "sessionize_users",
-    "dedup_exact_stats", "dedup_exact_keep_min",
-    "embedding_label_stats", "text_stats_by_lang",
-    "text_quality_topk", "doc_fingerprint_prefix",
-    "q2_min_cost_supplier", "dedup_containment_pairs",
-    "dedup_containment_guarded", "dedup_semantic_centroid",
-]
-
-# The explicit rotation queue (ADVICE r6 #4: no silent truncation —
-# what does not fit this round is QUEUED here by an explicit edit,
-# never dropped by a slice): the r10-latest remainder (41 oracle-bound
-# rows, in CORRECTNESS_r10 key order) — the r15 backfill head. After
-# these drain, the stalest pool is r11-latest (docs/CHECKED.md holds
-# the manifest).
-_QUEUED_NEXT = [
-    # r15: queue head drained into _BACKFILL (13 rows) and the queued
-    # rows that changed this round moved to _CHANGED (explicit edits,
-    # never a silent slice). Remainder below in the original
-    # CORRECTNESS_r10 key order — the r16 backfill head.
-    "embedding_matryoshka_audit",
-    "q4_order_priority",
-    "q6_forecast_revenue", "q10_returned_items",
-    "q11_important_stock", "q12_late_shipment_priority",
-    "q13_customer_distribution", "q15_top_supplier",
-    "q16_supplier_part_counts", "q17_small_quantity_revenue",
-    "q18_large_volume_customer", "q20_excess_quantity_suppliers",
-    "warc_ingest_records", "window_topk_per_group",
-    "scalar_string_funcs", "similarity_topk_exact",
-    "similarity_ann_lsh", "tfidf_top_terms", "window_rank_ties",
-    "similarity_ivf", "q21_waiting_orders",
-    "q22_global_sales_opportunity", "sql_api_exists",
-    "grouping_sets_sql", "percentile_exact", "variance_manual",
-    "correlation_manual", "unpivot_measures", "union_all_counts",
-    "range_join_purchase_errors", "streaming_session_windows",
-    "streaming_dedupe_count", "multimodal_decode",
-    "embedding_centroids", "vocab_top_tokens", "curation_filter",
-    "approx_cardinality",
-]
+_ROOT = Path(__file__).resolve().parents[1]
+_GREEN = ("rows_match", "schema_match", "hash_match")
 
 
-def _window() -> list[str]:
-    head = _CHANGED + _NEW_THIS_ROUND
-    # exact-fit invariant (ADVICE r6 #4): no silent backfill
-    # truncation — the three segments must sum to the window size;
-    # anything displaced moves to _QUEUED_NEXT by an explicit edit
-    assert len(head) + len(_BACKFILL) == _WINDOW_SIZE, (
-        f"window mis-sized: {len(head)} priority + {len(_BACKFILL)} "
-        f"backfill != {_WINDOW_SIZE}; move entries between _BACKFILL "
-        "and _QUEUED_NEXT so the sum is exact"
-    )
-    dupes = set(head) & set(_BACKFILL) | (
-        set(head) | set(_BACKFILL)) & set(_QUEUED_NEXT)
-    assert not dupes, f"query in two window segments: {sorted(dupes)}"
-    return head + _BACKFILL
+def _ours(obj) -> bool:
+    if isinstance(obj, types.ModuleType):
+        mod = obj.__name__
+    else:
+        mod = getattr(obj, "__module__", None)
+    return isinstance(mod, str) and mod.split(".")[0] == __package__
+
+
+@functools.cache
+def _module_index(module: str) -> tuple[dict, dict]:
+    """Source index of one of our modules: its top-level constants as
+    name -> (source text, names the value reads), and its functions and
+    classes as qualname -> (first line, source text)."""
+    src = inspect.getsource(sys.modules[module])
+    lines = src.splitlines(keepends=True)
+    tree = ast.parse(src)
+    consts, defs = {}, {}
+    for node in tree.body:
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, ast.AnnAssign) and node.value is not None:
+            targets = [node.target]
+        else:
+            continue
+        text = "".join(lines[node.lineno - 1:node.end_lineno])
+        reads = frozenset(
+            n.id for n in ast.walk(node.value) if isinstance(n, ast.Name)
+        )
+        for t in targets:
+            if isinstance(t, ast.Name):
+                consts[t.id] = (text, reads)
+
+    def walk(stmts, prefix):
+        for node in stmts:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                name = prefix + node.name
+                start = min(
+                    [node.lineno] + [d.lineno for d in node.decorator_list]
+                )
+                defs[name] = (start, "".join(lines[start - 1:node.end_lineno]))
+                sep = "." if isinstance(node, ast.ClassDef) else ".<locals>."
+                walk(node.body, name + sep)
+            else:
+                for field in ("body", "orelse", "finalbody", "handlers"):
+                    walk(getattr(node, field, ()), prefix)
+
+    walk(tree.body, "")
+    return consts, defs
+
+
+def _import(name: str):
+    try:
+        return importlib.import_module(name)
+    except ImportError:
+        return None
+
+
+def _attr(module, name):
+    """module.name, importing a submodule of ours not yet imported."""
+    try:
+        return getattr(module, name)
+    except AttributeError:
+        if _ours(module) and hasattr(module, "__path__"):
+            return _import(f"{module.__name__}.{name}")
+        return None
+
+
+def _node(obj, module=None, name=None):
+    """The closure node for ``obj`` read as ``module.name``: one of our
+    functions or classes, a (module, name) constant, or None."""
+    if isinstance(obj, types.FunctionType):
+        obj = inspect.unwrap(obj)
+    if isinstance(obj, (types.FunctionType, type)):
+        return obj if _ours(obj) else None
+    if (
+        module is not None and _ours(module)
+        and not isinstance(obj, types.ModuleType)
+        and name in _module_index(module.__name__)[0]
+    ):
+        return (module.__name__, name)
+    return None
+
+
+def _code_refs(code, g: dict, bindings: dict, out: set) -> None:
+    """Collect the nodes one code object (and the functions nested in
+    it) reads: globals, ``module.attr`` chains and function-local
+    ``from .x import y`` bindings."""
+    cur = importing = None
+    prev = (None, None)
+    for ins in dis.get_instructions(code):
+        op, arg, owner = ins.opname, ins.argval, None
+        if op == "LOAD_GLOBAL":
+            cur, owner = g.get(arg), sys.modules[g["__name__"]]
+        elif op in ("LOAD_FAST", "LOAD_DEREF", "LOAD_CLOSURE"):
+            cur = bindings.get(arg)
+        elif op in ("LOAD_ATTR", "LOAD_METHOD") and isinstance(
+            cur, types.ModuleType
+        ):
+            cur, owner = _attr(cur, arg), cur
+        elif op == "IMPORT_NAME":
+            level, fromlist = prev
+            full = importlib.util.resolve_name(
+                "." * level + arg, g["__package__"]
+            )
+            importing = None
+            if full.split(".")[0] == __package__:
+                # a bare `import hustle_spark.x` binds the package
+                importing = _import(full if fromlist else __package__)
+            cur = importing
+        elif op == "IMPORT_FROM" and isinstance(importing, types.ModuleType):
+            cur, owner = _attr(importing, arg), importing
+        elif op in ("STORE_FAST", "STORE_DEREF") and cur is not None:
+            bindings[arg] = cur
+            cur = None
+        else:
+            cur = None
+        if owner is not None:
+            node = _node(cur, owner, arg)
+            if node is not None:
+                out.add(node)
+        prev = (prev[1], arg)
+    for const in code.co_consts:
+        if isinstance(const, types.CodeType):
+            _code_refs(const, g, bindings, out)
+
+
+@functools.cache
+def _refs(node) -> frozenset:
+    """Closure nodes one node reads directly."""
+    out: set = set()
+    if isinstance(node, tuple):
+        module = sys.modules[node[0]]
+        for name in _module_index(node[0])[0][node[1]][1]:
+            ref = _node(vars(module).get(name), module, name)
+            if ref is not None:
+                out.add(ref)
+    elif isinstance(node, type):
+        for v in vars(node).values():
+            v = getattr(v, "__func__", getattr(v, "fget", v))
+            if isinstance(v, types.FunctionType):
+                _code_refs(v.__code__, v.__globals__, {}, out)
+    else:
+        _code_refs(node.__code__, node.__globals__, {}, out)
+    return frozenset(out)
+
+
+def _key(node) -> str:
+    if isinstance(node, tuple):
+        return ".".join(node)
+    return f"{node.__module__}.{node.__qualname__}"
+
+
+@functools.cache
+def _source(node) -> str:
+    if isinstance(node, tuple):
+        return _module_index(node[0])[0][node[1]][0]
+    defs = _module_index(node.__module__)[1]
+    start, text = defs.get(node.__qualname__, (0, ""))
+    code = getattr(node, "__code__", None)
+    if text and (code is None or code.co_firstlineno == start):
+        return text
+    try:
+        return inspect.getsource(node)
+    except (OSError, TypeError):
+        return ""
+
+
+def _closure(fn) -> list:
+    seen, todo = set(), [fn]
+    while todo:
+        node = todo.pop()
+        if node not in seen:
+            seen.add(node)
+            todo.extend(_refs(node))
+    return sorted(seen, key=lambda n: (_key(n), _source(n)))
+
+
+@functools.cache
+def query_content_hashes() -> dict[str, str]:
+    """md5 of each registered query's closure sources plus its oracle
+    SQL: the change signal of the window order and of
+    docs/query_hashes.json. Computed once per process."""
+    out = {}
+    for name, q in QUERIES.items():
+        body = "".join(
+            f"{_key(n)}\n{_source(n)}\n" for n in _closure(q.fn)
+        ) + (q.oracle or "")
+        out[name] = hashlib.md5(body.encode()).hexdigest()
+    return out
+
+
+@functools.cache
+def _manifest() -> dict[str, str]:
+    path = _ROOT / "docs" / "query_hashes.json"
+    return json.loads(path.read_text()) if path.is_file() else {}
+
+
+@functools.cache
+def _last_green() -> dict[str, tuple[int, int]]:
+    """name -> (round, key position) in the newest driver artifact
+    that holds the row green."""
+    rounds = {}
+    for path in _ROOT.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m is not None:
+            rounds[int(m.group(1))] = path
+    out = {}
+    for rnd in sorted(rounds):  # newer rounds overwrite older ones
+        rows = json.loads(rounds[rnd].read_text())
+        for pos, (name, row) in enumerate(rows.items()):
+            if all(row.get(k) for k in _GREEN):
+                out[name] = (rnd, pos)
+    return out
 
 
 def _ordered() -> list[str]:
-    window = _window()
-    missing = [n for n in window if n not in QUERIES]
-    assert not missing, f"window names not registered: {missing}"
-    rest = [n for n in QUERIES if n not in window]
-    return window + rest
-
-
-def query_content_hashes() -> dict[str, str]:
-    """md5(function source + oracle SQL) per registered query — the
-    change-detection signal for the window-sort invariant
-    (tests/test_window_invariant.py, docs/query_hashes.json)."""
-    import hashlib
-    import inspect
-
-    out = {}
-    for name, q in QUERIES.items():
-        body = inspect.getsource(q.fn) + "\n" + (q.oracle or "")
-        out[name] = hashlib.md5(body.encode()).hexdigest()
-    return out
+    hashes, stored = query_content_hashes(), _manifest()
+    changed = [n for n in QUERIES if stored.get(n) != hashes[n]]
+    rest = [n for n in QUERIES if stored.get(n) == hashes[n]]
+    green = _last_green()
+    proven = sorted(
+        (n for n in rest if QUERIES[n].oracle is not None),
+        key=lambda n: green.get(n, (0, 0)),
+    )
+    return changed + proven + [n for n in rest if QUERIES[n].oracle is None]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -106,7 +106,7 @@ SHOWCASE = {
     "multimodal_image_phash": "codegen BMP synthesis + one Arrow pHash stage; the integer DCT rides the same MapInPandas — no per-coefficient shuffle",
     "dedup_image_phash_groups": "group key = map-side md5 digest of the 63 AC bits; ONE groupBy shuffle moves 16-byte digests, never payloads",
     "dedup_semantic_centroid": "cluster-key equi-join (lists ~n/32) + one (cluster, dim) aggregation for centroid directions — no all-pairs stage anywhere",
-    # r11 flips (ann_ivf_pq_search moved up from CANDIDATE_SHOWCASE)
+    # r11 flips
     "ann_ivf_pq_search": "PQ codes ride the corpus frame as one array column; probe join broadcast on the query side bounds the scanned fraction; ADC via broadcast LUT; refine shortlist is a plan-guaranteed-small broadcast; the listed frame is tracked-cached so downstream actions share one quantize pass",
     "dedup_jaccard_ngram": "digest self-join with the max_df hot-shingle guard applied BEFORE the join — candidate pairs bounded, never a cross product; jaccard as integer micro-units",
     "dedup_jaccard_minhash_agreement": "broadcast semi-join restricts the exact-jaccard replay to the sketch's audited pairs — the expensive digest join is bounded by sketch output, not corpus size",
@@ -128,7 +128,7 @@ SHOWCASE = {
     "audio_mp3_frames_probe": "codegen MPEG-1 Layer III frame synthesis + one Arrow header-walk stage (bitrate/samplerate tables as plan data)",
     "tar_webdataset_probe": "codegen ustar members + one Arrow parse stage; 512-byte block math stays in the executor, payloads never on the driver",
     "zip_archive_probe": "codegen ZIP central directory + one Arrow EOCD/CD walk; stored and deflate entries inflated executor-side, bounded by declared usize",
-    # r13 flips (moved from CANDIDATE_SHOWCASE with the registration)
+    # r13 flips
     "tar_streaming_pack_requery": "derived shard count from a 1-row byte-estimate agg; repartition(shard) + sorted groups feed the streaming mapInPandas writer; re-read is a distributed binaryFile scan + one Arrow parse stage",
     "dedup_minhash_incremental_grow": "both sides grow with the corpus: index build is one signature groupBy over the 1/3 slice, batch joins on (band, sig) equality — still no all-pairs stage",
     "ann_ivf_pq_batched": "ONE build_ivf_pq_index (two cached frames) answers BOTH query batches — the second search's plan reads InMemoryTableScan, not a fresh quantize pass; the FAISS build/search amortization as a plan property",
@@ -140,7 +140,7 @@ SHOWCASE = {
     # r13 at-birth seam rows
     "lang_profiles_file_roundtrip": "the loaded (lang, tri, weight) TSV broadcasts exactly like the fit profile — explode map-only, doc-keyed score shuffle, per-doc argmax window; the file seam adds zero plan nodes",
     "audio_vad_table_probe": "the loaded step table ships in the mapInPandas closure — same single Arrow decode stage as audio_segments_probe, no join for the model",
-    # the r14 flip (moved from CANDIDATE_SHOWCASE — registered rows now)
+    # the r14 flip
     "dedup_soft_weights": "map-only fingerprint; ONE digest-keyed groupBy; the join back on the same key reuses the groupBy's exchange — text never crosses a shuffle",
     "dedup_soft_weights_fuzzy": "guarded jaccard pair stage (max_df bounds the digest join) -> edge-bounded pointer-jumping CC -> one label-keyed groupBy for sizes/weights; text never enters the weighting operator",
     "data_selection_moore_lewis": "ONE bigram explode feeds BOTH vocabulary-sized broadcast models; wide work is the doc-keyed re-aggregation and one range sort of the 1-row-per-doc score frame",
@@ -150,26 +150,13 @@ SHOWCASE = {
 }
 
 
-# staged candidate rows (hustle_spark/candidates.py) whose plans are
-# themselves evidence — resolved via STAGED_CANDIDATES until their
-# wave flips (empty after the r14 flip; new rows register at birth)
-CANDIDATE_SHOWCASE: dict = {}
-
-
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_session(app_name="explain-report", extra_conf={"spark.ui.enabled": "false"})
     out = ["# EXPLAIN — physical plans of flagship queries",
            "", f"Generated by `scripts/explain_report.py` at `{sf_dir}`.", ""]
-    from hustle_spark.candidates import STAGED_CANDIDATES
-
-    def resolve(name):
-        if name in registry.QUERIES:
-            return registry.QUERIES[name].fn
-        return STAGED_CANDIDATES[name][0]
-
-    for name, why in {**SHOWCASE, **CANDIDATE_SHOWCASE}.items():
-        df = resolve(name)(spark, sf_dir)
+    for name, why in SHOWCASE.items():
+        df = registry.QUERIES[name].fn(spark, sf_dir)
         plan = explain_str(df)
         # keep the operator tree + the scan details, drop codegen noise
         tree = plan.split("\n\n")[0]
@@ -179,7 +166,7 @@ def main():
         )
         out += [f"## {name}", "", f"*{why}*", "", "```", tree.strip(), "", scans, "```", ""]
     Path("EXPLAIN.md").write_text("\n".join(out))
-    print(f"wrote EXPLAIN.md ({len(SHOWCASE) + len(CANDIDATE_SHOWCASE)} plans)")
+    print(f"wrote EXPLAIN.md ({len(SHOWCASE)} plans)")
 
 
 if __name__ == "__main__":

@@ -25,7 +25,7 @@ This probe builds a text corpus shaped like real growth:
   - everything else is untouched (replica 0 IS the base corpus).
 
 It writes each leg as documents.parquet in a scratch dir and runs the
-EXACT registered chains via hustle_spark.candidates.ALL_CANDIDATES —
+EXACT registered chains via hustle_spark.registry.QUERIES —
 zero drift from the driver-gate code. Wall medians, output-row
 counts, and the ratio ladder go to one JSON line for BASELINE.md.
 
@@ -123,10 +123,10 @@ def build_corpus(spark, factor: int) -> str:
 
 
 def run_leg(spark, name: str, sf_dir: str, runs: int = 2) -> dict:
-    from hustle_spark.candidates import ALL_CANDIDATES
+    from hustle_spark.registry import QUERIES
     from hustle_spark.util import release_all_persistent
 
-    fn = ALL_CANDIDATES[name][0]
+    fn = QUERIES[name].fn
 
     def once() -> tuple[float, int]:
         from pyspark.sql import functions as F

@@ -27,12 +27,7 @@ def time_queries(sf_dir: str, names: list[str]) -> dict[str, float]:
     spark = get_session(app_name=f"scale-probe", extra_conf={"spark.ui.enabled": "false"})
     out: dict[str, float] = {}
     for name in names:
-        if name in registry.QUERIES:
-            fn = registry.QUERIES[name].fn
-        else:  # staged candidate rows are probe-able before the flip
-            from hustle_spark.candidates import STAGED_CANDIDATES
-
-            fn = STAGED_CANDIDATES[name][0]
+        fn = registry.QUERIES[name].fn
         best = float("inf")
         try:
             for _ in range(2):
@@ -92,9 +87,7 @@ def main() -> None:
         return
 
     names = [a for a in sys.argv[1:] if not a.startswith("-")]
-    from hustle_spark.candidates import STAGED_CANDIDATES
-
-    valid = set(registry.QUERIES) | set(STAGED_CANDIDATES)
+    valid = set(registry.QUERIES)
     unknown = [n for n in names if n not in valid]
     if unknown or not names:
         sys.exit(

@@ -69,7 +69,7 @@ EVENTS_PROBES = [
     "json_props_extract",
     "streaming_tumbling_hour",
     "rollup_view_requery",
-    # round-7 staged candidates (resolved via hustle_spark.candidates)
+    # round-7 rows
     "events_rolling_actives",
     "sketch_rollup_actives",
     # staged r10-cont: count-min heavy hitters — the probe pins that
@@ -115,8 +115,7 @@ DEFAULT_PROBES = [
     "text_lang_id_trigram",
     "html_block_extract",
     "dedup_semantic",
-    # round-7 staged candidates (wave-1 names below resolve via the
-    # registry since the r8 flip; still-staged ones via candidates)
+    # round-7 rows
     "text_gopher_quality",
     "text_gopher_repetition",
     "text_quality_classifier",

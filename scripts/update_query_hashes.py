@@ -1,16 +1,20 @@
-"""Regenerate docs/query_hashes.json — the per-query content manifest
-backing tests/test_window_invariant.py.
+"""Regenerate docs/query_hashes.json, the per-query content manifest
+that orders the driver window (hustle_spark/registry.py) and backs
+tests/test_window_invariant.py.
 
-Each entry is md5(query function source + oracle SQL).  The manifest is
-regenerated DELIBERATELY, only when the driver window has been rotated
-to cover every changed query: running this script is the act of saying
-"the current window ordering accounts for the current query bodies".
-Editing a query without re-running this script (and promoting the query
-into the first-50 window) fails pytest — that is the guardrail against
-the round-2 process bug where two edited queries sat at positions 51-52
-and escaped driver re-verification.
+Each entry is the md5 of the sources of every hustle_spark function,
+class and module constant the query's function reaches, plus its
+oracle SQL. A row whose hash differs from the manifest, or is missing
+from it, is "changed" and leads queries(), so the driver re-proves it.
 
-Usage: python scripts/update_query_hashes.py
+Regenerate ONLY after a green full oracle sweep on the final tree:
+
+    python scripts/check_oracle.py     # sf0.01 by default: 0 FAILED
+    python scripts/update_query_hashes.py
+
+Running this script declares every current row proven; regenerating
+before the sweep (or before the last code change) would hide changed
+rows from the window.
 """
 
 from __future__ import annotations

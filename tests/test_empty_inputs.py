@@ -277,25 +277,3 @@ def test_round5_operators_null_and_empty_inputs(spark):
     # (an empty eval suite flags nothing, it must not error or drop)
     out2 = embedding_contamination_scan(e, bench.limit(0)).collect()
     assert len(out2) == 0 or all(r.max_cosine_e6 is None for r in out2)
-
-
-def _candidate_names():
-    from hustle_spark.candidates import STAGED_CANDIDATES
-
-    return sorted(STAGED_CANDIDATES)
-
-
-@pytest.mark.parametrize("name", _candidate_names())
-def test_candidate_handles_empty_input(name, spark, empty_dir):
-    """Staged candidate rows face the same degenerate-input bar as
-    registered queries — the r8 flip must not import an empty-input
-    crash into the driver window."""
-    from hustle_spark.candidates import STAGED_CANDIDATES
-
-    fn, _ = STAGED_CANDIDATES[name]
-    if name in EXPECTED_ERROR:
-        with pytest.raises(EXPECTED_ERROR[name]):
-            fn(spark, empty_dir).count()
-        return
-    n = fn(spark, empty_dir).count()
-    assert n >= 0

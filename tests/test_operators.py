@@ -537,6 +537,29 @@ def test_repeated_substring_removal_rules(spark):
     assert within[1] > 0
 
 
+def test_repeated_substring_removal_ignores_null_id_documents(spark):
+    """A gram qualifies by its distinct non-NULL document ids, as the
+    collect_set(id) count did: here the shared region reaches
+    min_docs=2 only when NULL-id documents are counted, so nothing is
+    cut from document 1."""
+    from hustle_spark.operators.suffixes import repeated_substring_removal
+
+    rows = [
+        (1, "xq1 COMMON-SEGMENT-42 zk9"),
+        (None, "wm2 COMMON-SEGMENT-42 ty7"),
+        (None, "pp3 COMMON-SEGMENT-42 rr8"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r.doc_id: r.n_removed
+        for r in repeated_substring_removal(
+            df, min_len=6, min_docs=2, prefix_cap=12
+        ).collect()
+        if r.doc_id is not None
+    }
+    assert got == {1: 0}
+
+
 def test_repeated_substring_removal_matches_duckdb(spark, catalog, duck):
     """Differential replay of the cut over a bounded document sample:
     member marks, interval merge, and gap-substring rebuild reproduced

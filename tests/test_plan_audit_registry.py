@@ -33,17 +33,17 @@ ALLOWED_NESTED_LOOP = {
     "text_lm_perplexity",      # 1-row reference-LM total broadcast
                                # (the unigram fppm pattern) — flipped
                                # from the candidate pool in r8
-    # the r11 flip (moved here from CANDIDATE_ALLOWED_NESTED_LOOP):
+    # the r11 flip:
     "ann_ivf_pq_search",       # broadcast tiny fixed query set:
                                # per-query LUT + the exact-topk audit
                                # brute force, by design
     "embedding_hard_negatives",  # 5-row broadcast anchor set with a
                                # label-inequality predicate — the
                                # declared cosine_topk shape
-    # the r12 flip (moved here from CANDIDATE_ALLOWED_NESTED_LOOP):
+    # the r12 flip:
     "mixture_temperature_budget",  # 1-row weight-sum broadcast (the
                                # unigram-fppm scalar pattern)
-    # the r13 flip (moved here from CANDIDATE_ALLOWED_NESTED_LOOP):
+    # the r13 flip:
     "ann_ivf_pq_batched",      # same declared shapes as
                                # ann_ivf_pq_search: broadcast tiny
                                # query batches + the exact-topk audit
@@ -80,9 +80,9 @@ ALLOWED_PYTHON = {
     "audio_pitch_probe",         # PCM autocorrelation
     "audio_segments_probe",      # PCM energy windows
     "dedup_image_phash_groups",  # pixel decode + integer DCT
-    # the r11 flip (moved here from CANDIDATE_ALLOWED_PYTHON):
+    # the r11 flip:
     "multimodal_gif_probe",      # LZW pixel decode, same path
-    # the r12 flip (moved here from CANDIDATE_ALLOWED_PYTHON):
+    # the r12 flip:
     "multimodal_tiff_probe",     # IFD walk + strip assembly, same path
     "audio_mp3_frames_probe",    # VBR frame walk, same path
     "tar_webdataset_probe",      # ustar shard walk, same path
@@ -95,7 +95,7 @@ ALLOWED_PYTHON = {
     # the audio_mp3_frames_probe mapInPandas walk path, one level
     # deeper into the frame
     "audio_mp3_sideinfo_probe",
-    # the r13 flip (moved here from CANDIDATE_ALLOWED_PYTHON):
+    # the r13 flip:
     "tar_streaming_pack_requery",  # the PRODUCTION packer's declared
                                  # mapInPandas streaming writer + the
                                  # binaryFile re-read's Arrow ustar walk
@@ -157,11 +157,8 @@ def _lazy_ann_ivf_pq_batched(spark, sf_dir):
 
 LAZY_PLAN_VARIANTS = {
     "ann_ivf_pq_search": _lazy_ann_ivf_pq_search,
-    # flipped r13 — the batched variant moved here from
-    # CANDIDATE_LAZY_PLAN_VARIANTS with its row's registration
     "ann_ivf_pq_batched": _lazy_ann_ivf_pq_batched,
 }
-CANDIDATE_LAZY_PLAN_VARIANTS: dict = {}
 
 
 # ADVICE r12 #4: the lazy variants rebuild their pipelines
@@ -219,39 +216,5 @@ def test_plan_invariants(name, spark, catalog):
         assert "CartesianProduct" not in plan, f"{name}: cartesian product"
         assert "BroadcastNestedLoopJoin" not in plan, f"{name}: nested loop join"
     if name not in ALLOWED_PYTHON:
-        for node in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas"):
-            assert node not in plan, f"{name}: unexpected Python stage {node}"
-
-
-# staged candidate rows (hustle_spark/candidates.py) face the same
-# plan bar BEFORE their wave's flip imports them into the driver
-# window (r8 moved its wave-1 entries into the registry lists above)
-CANDIDATE_ALLOWED_NESTED_LOOP: set[str] = {
-    # staged r13 (one-round-max invariant; flips r14):
-    "data_selection_moore_lewis",  # two 1-row vocabulary-size scalar
-                               # broadcasts (the text_lm_perplexity
-                               # V-crossJoin idiom, once per model)
-}
-CANDIDATE_ALLOWED_PYTHON: set[str] = set()
-
-
-def _candidates():
-    from hustle_spark.candidates import STAGED_CANDIDATES
-
-    return sorted(STAGED_CANDIDATES)
-
-
-@pytest.mark.parametrize("name", _candidates())
-def test_candidate_plan_invariants(name, spark, catalog):
-    from hustle_spark.candidates import STAGED_CANDIDATES
-
-    plan = _audited_frame(
-        name, STAGED_CANDIDATES[name][0], spark,
-        "/root/testdata/sf0.001", CANDIDATE_LAZY_PLAN_VARIANTS,
-    )
-    if name not in CANDIDATE_ALLOWED_NESTED_LOOP:
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
-        assert "BroadcastNestedLoopJoin" not in plan, f"{name}: nested loop join"
-    if name not in CANDIDATE_ALLOWED_PYTHON:
         for node in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas"):
             assert node not in plan, f"{name}: unexpected Python stage {node}"

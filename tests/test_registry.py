@@ -34,25 +34,23 @@ def test_query_vs_oracle(name, spark, duck, catalog):
 
 def test_window_priority_ordering():
     """The driver verifies exactly the first 50 entries of queries();
-    pin the rotation invariants so a registry edit can't silently
-    shrink coverage (docs/CHECKED.md is the per-round manifest; the
-    content-hash invariant lives in tests/test_window_invariant.py)."""
+    pin the derived order so a registry edit can't silently shrink
+    coverage (the order itself is checked in
+    tests/test_window_invariant.py)."""
     from hustle_spark import registry
 
     names = list(registry.queries())
     assert len(names) == len(set(names)), "duplicate query names"
     window = names[:50]
-    # everything without a driver row — changed since its last row or
-    # registered this round — must sit inside the window
-    must_check = set(registry._CHANGED) | set(registry._NEW_THIS_ROUND)
-    assert must_check <= set(registry.QUERIES)
+    # every row without a driver row for its current code — changed
+    # since the manifest or new — must sit inside the window
+    hashes, stored = registry.query_content_hashes(), registry._manifest()
+    must_check = {n for n in registry.QUERIES if stored.get(n) != hashes[n]}
     missing = must_check - set(window)
     assert not missing, f"must-check queries outside window: {missing}"
     # every window entry is oracle-bound UNLESS it is a must-check
-    # promotion: a changed rows-only sketch still needs its (weaker)
-    # driver row refreshed — the window-sort invariant outranks the
-    # slot-economy preference. PROVEN rows-only entries must not burn
-    # backfill slots.
+    # row: a changed rows-only sketch still needs its (weaker) driver
+    # row refreshed. PROVEN rows-only entries must not burn slots.
     import __spark_entry__ as entry
 
     osql = entry.oracle_sql()
@@ -63,6 +61,37 @@ def test_window_priority_ordering():
     # oracle_sql keys must be a subset of queries and aligned by name
     osql = registry.oracle_sql()
     assert set(osql) <= set(names)
+
+
+def test_import_order_registers_the_same_oracles():
+    """Importing candidates before registry, or registry before
+    candidates, registers the same name -> oracle map (each row binds
+    its oracle in its own @query, so no binding depends on which
+    module finishes first)."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    maps = []
+    for first in ("hustle_spark.candidates", "hustle_spark.registry"):
+        code = (
+            f"import json, {first}\n"
+            "from hustle_spark import registry\n"
+            "print(json.dumps({n: q.oracle for n, q in registry.QUERIES.items()}))"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", code], cwd=root, check=True,
+            capture_output=True, text=True,
+        ).stdout
+        maps.append(json.loads(out.splitlines()[-1]))
+    from hustle_spark import registry
+
+    assert list(maps[0].items()) == list(maps[1].items())
+    assert maps[0] == {n: q.oracle for n, q in registry.QUERIES.items()}
+    for name in ("audio_vad_table_probe", "lang_profiles_file_roundtrip"):
+        assert maps[0][name], f"{name}: no oracle bound"
 
 
 def test_lifecycle_queries_rerun_stable(spark):
