@@ -223,8 +223,8 @@ def main() -> None:
             print(f"bench: {name} failed: {exc}", file=sys.stderr)
             out[name] = -1.0
         finally:
-            # keep storage flat between queries: tracked caches AND
-            # lingering localCheckpoint blocks (the r8 sf1 OOM lesson)
+            # keep storage flat between queries: free every cache and
+            # localCheckpoint the query owns (the r8 sf1 OOM lesson)
             from hustle_spark.util import release_all_persistent
 
             release_all_persistent(spark)

@@ -474,7 +474,7 @@ def dedup_exact_substr_combined(spark, sf_dir):
         spark,
     )
     s1 = dedup.repeated_span_removal(d, span=16, min_docs=2)
-    mid = s1.select("doc_id", "text").localCheckpoint()
+    mid = _util.own(s1.select("doc_id", "text").localCheckpoint())
     return suffixes.repeated_substring_removal(
         mid, min_len=24, min_docs=2, prefix_cap=24
     ).select("doc_id", "text", "n_chars", "n_removed")
@@ -2187,7 +2187,7 @@ def embedding_pq_audit(spark, sf_dir):
     # eager checkpoint (r14): dims feeds both the centroid aggregate
     # and the distortion join probe side — uncheckpointed, the
     # quantize+double-explode subtree computed twice per action
-    dims = dims.localCheckpoint(eager=True)
+    dims = _util.own(dims.localCheckpoint(eager=True))
     cent = dims.groupBy("m", "code", "j").agg(
         F.expr("sum(v) div count(1)").alias("c")
     )
@@ -2238,8 +2238,8 @@ def events_rolling_actives(spark, sf_dir):
     # cached: BOTH the dau and wau branches read this frame — without
     # it the plan pays the raw-event scan + distinct shuffle twice
     # (seen in EXPLAIN.md before the fix, no ReusedExchange)
-    daily = _util.tracked_cache(
-        ev.select(day.alias("day"), "user_id").distinct()
+    daily = _util.own(
+        ev.select(day.alias("day"), "user_id").distinct().cache()
     )
     dau = daily.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
     contrib = daily.select(
@@ -2418,7 +2418,7 @@ def corpus_build_pipeline(spark, sf_dir):
     # pins the good stage-by-stage plan and the join side becomes a
     # scalar-thin materialized set.
     keep_ids = (
-        vd.localCheckpoint(eager=True)
+        _util.own(vd.localCheckpoint(eager=True))
         .filter(F.col("keep")).select("doc_id")
     )
     kept = docs.join(keep_ids, "doc_id", "left_semi")
@@ -3049,15 +3049,15 @@ def dedup_jaccard_minhash_agreement(spark, sf_dir):
     # into a 50-query correctness window — the ivf_pq_topk lesson).
     # The band-join machinery this hides from THIS row's audited plan
     # stays plan-audited via its twins (dedup_minhash_md5/_lsh).
-    est = est.localCheckpoint(eager=True)
+    est = _util.own(est.localCheckpoint(eager=True))
     audited = est.select(
         F.explode(F.array("a", "b")).alias("id")
     ).distinct()
     # audited-restricted digest sets: plain equi-join (NOT broadcast —
     # at a 10% near-dup rate the audited set is corpus-fraction-sized)
-    fps = dedup.ngram_digest_sets(d, shingle_n=3).join(
+    fps = _util.own(dedup.ngram_digest_sets(d, shingle_n=3).join(
         audited, "id"
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True))
     fa = fps.select(F.col("id").alias("a"), F.col("__fps").alias("__fa"))
     fb = fps.select(F.col("id").alias("b"), F.col("__fps").alias("__fb"))
     return (
@@ -4406,8 +4406,8 @@ def ann_ivf_pq_batched(spark, sf_dir):
             .withColumn("batch", F.lit(2).cast("bigint"))
         )
     )
-    out = out.localCheckpoint(eager=True)
-    _util.release_frames([idx["listed"], idx["centroids"]])
+    out = _util.own(out.localCheckpoint(eager=True))
+    _util.release([idx["listed"], idx["centroids"]])
     return out
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from .expr import Aggregate, Column, Expr
 from .table import Table
+from .util import own
 
 _JOIN_TYPES = {
     "inner", "cross", "full", "full_outer", "left", "left_outer",
@@ -312,9 +313,10 @@ def _materialize(df: DataFrame, tables: list[Table], nest_name: str | None) -> T
     """Reference ``nest=True``: write the result back as a queryable
     Table (public repo: ``hustle/core/pipeline.py``). With a catalog we
     persist to parquet (exactly hustle's marbles-to-a-fresh-tag move);
-    otherwise cache in memory."""
+    otherwise cache in memory, owned by the calling thread (util.own)
+    until util.release()."""
     catalog = next((t.catalog for t in tables if t.catalog is not None), None)
     if catalog is not None:
         return catalog.materialize(df, name=nest_name)
     name = nest_name or f"nested_{abs(id(df)) % 10**8}"
-    return Table(name, df.cache())
+    return Table(name, own(df.cache()))

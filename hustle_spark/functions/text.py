@@ -699,15 +699,15 @@ def drop_boilerplate_paragraphs(
         .filter(F.col("__df") > max_df)
         .select("__d")
     )
-    from ..util import tracked_cache
+    from ..util import own
 
     # marked feeds BOTH the stats aggregate and the reassembly — cache
     # it (the containment_pairs/minhash convention) or each action
     # replays the paragraph explode + broadcast join over the corpus
-    marked = tracked_cache(
+    marked = own(
         paras.withColumn("__d", digest).join(
             F.broadcast(hot.withColumn("__hot", F.lit(True))), "__d", "left"
-        )
+        ).cache()
     )
     kept = marked.filter(F.col("__hot").isNull())
     out = (
@@ -773,7 +773,7 @@ def padding_waste_by_bucket(
     """
     from pyspark.sql import Window
 
-    from ..util import tracked_cache
+    from ..util import own
 
     tc = token_count(F.col(text))
     # NULL-text docs have no token length: excluded from the report
@@ -784,8 +784,8 @@ def padding_waste_by_bucket(
     # histogram and the assignment join — so cache it: without the
     # cache each consumer re-scans the full documents table (a second
     # full text scan at 100 TB for a report query).
-    lengths = tracked_cache(
-        df.select(tc.alias("__tc")).filter(F.col("__tc").isNotNull())
+    lengths = own(
+        df.select(tc.alias("__tc")).filter(F.col("__tc").isNotNull()).cache()
     )
     freq = lengths.groupBy("__tc").agg(F.count(F.lit(1)).alias("__c"))
     # histogram-sized frames: single-partition windows are constant-cost
@@ -872,8 +872,9 @@ def bpe_learn_merges(
     map-only fold applies the merge. Production BPE trains on a corpus
     SAMPLE; the loop here is the honest distributed shape for the
     counting phase, which is where corpus scale lives. Intermediate
-    token frames are tracked-cached; each round releases its
-    predecessor. The input is spread to the session's parallelism
+    token frames are cached and owned by the calling thread; each round
+    releases its predecessor, and the caller releases the final one.
+    The input is spread to the session's parallelism
     BEFORE tokenization (r14; only the text column rides the
     equalizing shuffle — ADVICE r14): every round's merge fold and
     pair count replay over the cached token frame's partitioning, so a
@@ -894,12 +895,11 @@ def bpe_learn_merges(
     per round plus a single sum-of-sizes bookend for the final round.
     The min(struct(-c, g)) aggregate replays the old
     ORDER BY c DESC, g ASC LIMIT 1 total order exactly."""
-    from ..util import spread_input, tracked_cache
+    from ..util import own, release, spread_input
 
-    cur = spread_input(df.select(F.col(text)), df.sparkSession).select(
+    cur = own(spread_input(df.select(F.col(text)), df.sparkSession).select(
         tokens(F.col(text)).alias("__toks")
-    )
-    cur = tracked_cache(cur)
+    ).cache())
     merges = []
     pending = None  # (round, a, b, pair_count) awaiting total_after
     prev_frame = None  # superseded cache, released once cur materializes
@@ -936,7 +936,7 @@ def bpe_learn_merges(
             F.max(F.when(F.col("g").isNull(), F.col("c"))).alias("nd"),
         ).collect()[0]
         if prev_frame is not None:
-            prev_frame.unpersist()  # cur's cache materialized just now
+            release([prev_frame])  # cur's cache materialized just now
             prev_frame = None
         if pending is not None:
             merges.append(
@@ -947,8 +947,8 @@ def bpe_learn_merges(
             break
         a, b = row.top.g.split(" ", 1)
         joined = a + sep + b
-        nxt = tracked_cache(
-            cur.select(bpe_apply_merge(F.col("__toks"), a, b, joined).alias("__toks"))
+        nxt = own(
+            cur.select(bpe_apply_merge(F.col("__toks"), a, b, joined).alias("__toks")).cache()
         )
         pending = (rnd, a, b, int(-row.top.nc))
         prev_frame = cur
@@ -962,7 +962,7 @@ def bpe_learn_merges(
         ).collect()[0].n
         merges.append(pending + (int(total_after or 0),))
     if prev_frame is not None:
-        prev_frame.unpersist()
+        release([prev_frame])
     return merges, cur
 
 
@@ -1403,7 +1403,7 @@ def lm_perplexity_scores(
     slices) and BROADCAST into the per-bigram join; the corpus-sized
     shuffles are the per-doc re-aggregation (map-side combined) and
     the one range sort of the 1-row-per-doc score frame."""
-    from ..util import global_dense_rank
+    from ..util import global_dense_rank, own
 
     toks = F.split(F.lower(F.coalesce(F.col(text), F.lit(""))), WS)
     ref = df.filter(ref_where)
@@ -1417,7 +1417,7 @@ def lm_perplexity_scores(
     # TWO broadcast subtrees (bc itself and the pc re-aggregation) —
     # uncheckpointed, each broadcast job replays the reference explode
     # + count from the corpus scan
-    bc = bc.filter(F.col("__c12") >= min_count).localCheckpoint(eager=True)
+    bc = own(bc.filter(F.col("__c12") >= min_count).localCheckpoint(eager=True))
     pc = bc.groupBy(
         F.split(F.col("gram"), " ")[0].alias("__w1")
     ).agg(F.sum("__c12").alias("__pc"))
@@ -1446,12 +1446,12 @@ def lm_perplexity_scores(
             ).cast("bigint").alias("__nll_e6"),
         )
     )
-    per_doc = scored_pairs.groupBy(id_col).agg(
+    per_doc = own(scored_pairs.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.sum("__nll_e6").alias("sum_nll_e6"),
     ).withColumn(
         "mean_nll_e6", F.expr("sum_nll_e6 DIV n_bigrams").cast("bigint")
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True))
     # ^ eager checkpoint (r14): the 1-row-per-doc score frame feeds the
     # n_scored broadcast, the rank's range sort AND its offsets collect
     # — uncheckpointed, the whole pairs+model join replayed 3x
@@ -2324,7 +2324,7 @@ def dsir_importance(
     join; the doc score is ONE doc-keyed shuffle; selection is the
     range-partitioned rank. Nothing grows with the corpus except the
     two linear scans."""
-    from ..util import global_dense_rank
+    from ..util import global_dense_rank, own
 
     t = F.coalesce(F.col(text), F.lit(""))
     nib = (
@@ -2366,7 +2366,7 @@ def dsir_importance(
     # rows) and feeds TWO consumers — the totals scalar and the weight
     # table — each of which otherwise replays the full corpus
     # explode+md5 to rebuild it (3 corpus passes in the plan; 2 after)
-    prof = prof.localCheckpoint(eager=True)
+    prof = own(prof.localCheckpoint(eager=True))
     tot = prof.agg(
         F.sum("t_b").cast("bigint").alias("tt"),
         F.sum("r_b").cast("bigint").alias("rr"),
@@ -2441,6 +2441,8 @@ def dsir_fit_weights(
     Property pinned in tests/test_text_curation.py: fit -> dump ->
     load -> score reproduces :func:`dsir_importance`'s output
     bit-for-bit (loaded ≡ inline, the merges.txt precedent)."""
+    from ..util import own
+
     t = F.coalesce(F.col(text), F.lit(""))
     base = df.select(
         is_target.alias("__tgt"), F.split(t, WS).alias("toks")
@@ -2469,7 +2471,7 @@ def dsir_fit_weights(
     # eager checkpoint (r14): same two-consumer bounded profile as
     # dsir_importance — totals scalar + weight select each replayed
     # the corpus explode+md5 without it
-    prof = prof.localCheckpoint(eager=True)
+    prof = own(prof.localCheckpoint(eager=True))
     tot = prof.agg(
         F.sum("t_b").cast("bigint").alias("tt"),
         F.sum("r_b").cast("bigint").alias("rr"),

@@ -28,13 +28,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Cached intermediates (minhash/simhash signature frames). Caching is
+# Cached intermediates (minhash/simhash signature frames) are owned by
+# the calling thread (util.own) and freed by util.release(). Caching is
 # the right call at scale — signatures are ~300 B/doc vs re-scanning
-# the full text corpus 3x. Tracking/release now lives in util so other
-# reuse sites (e.g. q15's revenue view) share one registry; this
-# module's release_cached() remains the public entry point callers
-# (bench, services) already use.
-from ..util import release_cached, tracked_cache as _tracked_cache  # noqa: F401
+# the full text corpus 3x.
+from ..util import is_checkpoint, own, release
 
 
 def exact_dedup(df: DataFrame, cols: list[str], keep_by: str | None = None) -> DataFrame:
@@ -156,8 +154,8 @@ def minhash_lsh_pairs(
             "silently lowering recall below the configured curve"
         )
     rows_per_band = n_hashes // bands
-    sigs = _tracked_cache(
-        minhash_signatures(df, text, id_col, n_hashes, shingle_n, hash=hash)
+    sigs = own(
+        minhash_signatures(df, text, id_col, n_hashes, shingle_n, hash=hash).cache()
     )
     band_cols = [
         F.struct(
@@ -332,7 +330,7 @@ def simhash_near_pairs(
     ~6e-5 of pairs; chunks=8 (8-bit) would admit ~1.4% — quadratic."""
     if chunks <= max_hamming:
         raise ValueError("need chunks > max_hamming for the pigeonhole guarantee")
-    fps = _tracked_cache(simhash(df, text, id_col))
+    fps = own(simhash(df, text, id_col).cache())
     width = 64 // chunks
     chunk_cols = F.array(
         *[
@@ -389,7 +387,11 @@ def connected_components(
     so convergence is O(log diameter) iterations, not O(diameter).
     Iteration is driver-controlled with a convergence check — this is
     the declared iterative-algorithm class, not a hot-path collect.
+    The returned frame reads a checkpoint owned by the calling thread
+    (util.own); util.release() frees it.
     """
+    if max_iterations < 1:
+        raise ValueError("max_iterations must be >= 1")
     # materialize the DIRECTED edge list once (eager checkpoint), then
     # derive the undirected view from it: for real pair graphs the
     # edge-producing join (LSH candidates / cosine verify / digest
@@ -398,17 +400,17 @@ def connected_components(
     # (r14 — one full pairs pass saved; guide section 1.2). The union
     # over checkpoint blocks is memory-fast every iteration, so the
     # separate und cache is no longer needed.
-    e0 = edges.select(
+    e0 = own(edges.select(
         F.col(a_col).alias("x"), F.col(b_col).alias("y")
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True))
     und = e0.union(
         e0.select(F.col("y").alias("x"), F.col("x").alias("y"))
     )
     # initial label: min(self, min neighbor)
-    labels = init_labels = (
+    labels = own((
         und.groupBy("x").agg(F.min("y").alias("nbr_min"))
         .select("x", F.least(F.col("x"), F.col("nbr_min")).alias("label"))
-    ).cache()
+    ).cache())
     if stats is not None:
         stats["iterations"] = 0
         stats["converged"] = False
@@ -421,10 +423,10 @@ def connected_components(
             .groupBy("x").agg(F.min("label").alias("nbr_label"))
         )
         # cached: referenced twice by the pointer-jump self-join below
-        prop = (
+        prop = own((
             labels.join(nbr, "x", "left")
             .select("x", F.least("label", F.coalesce("nbr_label", "label")).alias("label"))
-        ).cache()
+        ).cache())
         # pointer jump: label <- label[label]
         #
         # localCheckpoint, not cache: each iteration's plan references the
@@ -432,12 +434,11 @@ def connected_components(
         # without lineage TRUNCATION the logical plan grows exponentially
         # and the DRIVER dies building plan trees long before any executor
         # works — cache materializes data but keeps the full plan. Eager
-        # local checkpoint cuts the plan to a leaf each iteration. Blocks
-        # live on executors and are freed by the ContextCleaner when the
-        # superseded iteration's RDD is GC'd; on a real cluster with
-        # dynamic allocation use spark.sparkContext.setCheckpointDir +
-        # .checkpoint() instead (executor loss would drop local blocks).
-        jumped = (
+        # local checkpoint cuts the plan to a leaf each iteration. On a
+        # real cluster with dynamic allocation use
+        # spark.sparkContext.setCheckpointDir + .checkpoint() instead
+        # (executor loss would drop local blocks).
+        jumped = own((
             prop.alias("P")
             .join(
                 prop.select(F.col("x").alias("label"), F.col("label").alias("ll")).alias("L"),
@@ -445,34 +446,28 @@ def connected_components(
                 "left",
             )
             .select(F.col("x"), F.least(F.col("label"), F.coalesce("ll", "label")).alias("label"))
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=True))
         changed = (
             jumped.alias("N")
             .join(labels.alias("O"), "x")
             .filter(F.col("N.label") != F.col("O.label"))
             .count()
         )
-        labels.unpersist()
-        prop.unpersist()
+        # jumped is materialized and reads neither: free the superseded
+        # label frame (the initial cache or last round's checkpoint)
+        release([labels, prop])
         labels = jumped
         if changed == 0:
             if stats is not None:
                 stats["converged"] = True
             break
-    # final labels stay cached (downstream actions would otherwise
-    # replay the whole iterative lineage); released via release_cached()
-    _tracked_cache(labels)
-    # e0's checkpoint blocks are edge-sized and no longer reachable
-    # once labels is itself a checkpoint leaf — free them NOW instead
-    # of waiting for ContextCleaner GC / query-boundary cleanup
-    # (ADVICE r14: compositions calling CC repeatedly inside one query
-    # otherwise accumulate edge-sized blocks). Only safe after the
-    # loop ran: an un-iterated labels frame would still recompute
-    # through e0's lineage.
-    if labels is not init_labels:
-        from ..util import release_frames
-
-        release_frames([e0])
+    # the loop ran at least once, so labels is a checkpoint leaf that no
+    # longer reads e0's edge-sized blocks: free them NOW instead of at
+    # the query boundary (compositions calling CC repeatedly inside one
+    # query otherwise accumulate them). labels stays owned: downstream
+    # actions read its blocks instead of replaying the loop.
+    assert is_checkpoint(labels)
+    release([e0])
     return labels.select(F.col("x").alias("id"), F.col("label").alias("cluster_id"))
 
 
@@ -529,7 +524,7 @@ def simhash_md5_near_pairs(
     if chunks <= max_hamming:
         raise ValueError("need chunks > max_hamming for the pigeonhole guarantee")
     width = 64 // chunks
-    fps = _tracked_cache(simhash_md5_bits(df, text, id_col))
+    fps = own(simhash_md5_bits(df, text, id_col).cache())
     chunk_cols = F.array(
         *[
             F.struct(
@@ -658,8 +653,8 @@ def containment_pairs(
     # cached: the fingerprint frame feeds sizes + BOTH join sides — four
     # re-evaluations of the (interpreted) HOF chain otherwise, same
     # rationale as minhash_lsh_pairs caching its signatures
-    fps = _tracked_cache(
-        winnowing_fingerprints(df, text, id_col, k, window, hash)
+    fps = own(
+        winnowing_fingerprints(df, text, id_col, k, window, hash).cache()
     )
     shared = _digest_pair_counts(
         fps.select(F.col(id_col).alias("id"), F.col("fingerprints")),
@@ -763,7 +758,7 @@ def jaccard_ngram_pairs(
     quadratic blowup); set sizes are re-joined from the FULL distinct
     set, so dropped grams shrink ``shared`` (reported honestly) but
     never corrupt |S(a)| or |S(b)|."""
-    fps = _tracked_cache(ngram_digest_sets(df, text, id_col, shingle_n))
+    fps = own(ngram_digest_sets(df, text, id_col, shingle_n).cache())
     shared = _digest_pair_counts(fps, "__fps", min_shared, max_df)
     return (
         shared.select(
@@ -814,8 +809,8 @@ def dedup_pipeline(
     pointer-jump CC over id pairs, and one final window over
     cluster_id. The document TEXT is never shuffled; only ids, hashes,
     and the quality scalar move. Signature and CC label frames are
-    tracked-cached — call ``release_cached()`` after materializing the
-    result (the module convention bench/services already follow).
+    owned by the calling thread — call ``util.release()`` after
+    materializing the result.
     """
     from ..functions.text import quality_score
 
@@ -885,7 +880,7 @@ def repeated_span_removal(
     # and the flag join (a self-join shape Spark would otherwise
     # compute twice — the plan showed two full explode+scan subtrees);
     # it is the skinny (id, pos, md5) frame, so caching it is cheap
-    windows = _tracked_cache(_span_windows(base, id_col, span))
+    windows = own(_span_windows(base, id_col, span).cache())
     hot = (
         windows.groupBy("__d")
         .agg(F.count_distinct(F.col(id_col)).alias("__df"))

@@ -48,7 +48,7 @@ def pagerank(
     rank_scaled in micro-units. Dangling mass is DROPPED (the
     simple-sink convention, documented; redistributing it adds one
     scalar agg per round)."""
-    from ..util import tracked_cache
+    from ..util import own
 
     deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("__deg"))
     # cache the degree-joined edge table and the node list: every
@@ -56,8 +56,8 @@ def pagerank(
     # n_iter copies of the edges scan + degree shuffle (the docstring's
     # "computed once and reused" would be a lie). For large n_iter add
     # a periodic localCheckpoint on ranks to cut lineage growth.
-    ed = tracked_cache(edges.join(deg, src))
-    node_ids = tracked_cache(nodes.select(F.col(id_col).alias("id")))
+    ed = own(edges.join(deg, src).cache())
+    node_ids = own(nodes.select(F.col(id_col).alias("id")).cache())
     ranks = node_ids.select(
         "id", F.lit(1_000_000).cast("long").alias("rank_scaled")
     )

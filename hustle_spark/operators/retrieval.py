@@ -112,8 +112,9 @@ def bm25_tf_frame(
     (query_id, term) table, and the two scalar corpus stats (declared
     loop-control collects, the tfidf n_docs precedent).
 
-    ``freeze=True`` eagerly localCheckpoints the tf table and releases
-    the tokenized base cache (r15, guide section 1.2/5): every scorer
+    ``freeze=True`` eagerly localCheckpoints the tf table (owned by the
+    calling thread, like the base cache) and releases the tokenized
+    base cache (r15, guide section 1.2/5): every scorer
     reads tf twice (its df/idf subtree plus the scoring join), so
     multi-curve compositions — the rank-agreement audit (2 curves) and
     rrf_fusion (2 ranker families) — replay the explode + prune + tf
@@ -123,18 +124,18 @@ def bm25_tf_frame(
     consumers over the cached base the checkpoint action costs more
     than the replay it saves (bm25_topk 1.04 -> 1.23 s when frozen —
     the r14 tiny-frame lesson)."""
-    from ..util import release_frames, tracked_cache
+    from ..util import own, release
 
     spark = docs.sparkSession
-    # tracked-cache the tokenized frame: the N/A stats collect below
-    # AND the exploded term scan both read it — uncached, the
-    # lower+split over every document would run twice per invocation
-    base = tracked_cache(docs.select(
+    # cache the tokenized frame: the N/A stats collect below AND the
+    # exploded term scan both read it — uncached, the lower+split over
+    # every document would run twice per invocation
+    base = own(docs.select(
         F.col(id_col).alias("doc_id"),
         F.split(
             F.lower(F.coalesce(F.col(text), F.lit(""))), r"\s+"
         ).alias("__toks"),
-    ))
+    ).cache())
     stats = base.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.size("__toks")).cast("bigint").alias("a"),
@@ -164,8 +165,8 @@ def bm25_tf_frame(
         # consumers (the stats collect above, this materialization) —
         # release it here instead of pinning the full corpus until
         # query-boundary cleanup
-        tf = tf.localCheckpoint(eager=True)
-        release_frames([base])
+        tf = own(tf.localCheckpoint(eager=True))
+        release([base])
     return tf, qdf, n_docs, total_tokens
 
 

@@ -918,7 +918,6 @@ def build_ivf_pq_index(
     d_sub: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    freeze: bool = True,
 ) -> dict:
     """Build the IVF+PQ index ONCE, amortized across many
     :func:`ivf_pq_search` calls — the FAISS build/search split (r12:
@@ -927,12 +926,7 @@ def build_ivf_pq_index(
     single batch but wrong for the production loop of "index the
     corpus, then answer query batches all day").
 
-    ``freeze=False`` swaps the eager checkpoints for the pre-r15 lazy
-    tracked caches — results identical; used by the plan-audit lazy
-    variants (tests/test_plan_audit_registry.py), which must see the
-    full build subtree instead of a checkpoint leaf.
-
-    Returns a dict of the two cached index frames plus the build
+    Returns a dict of the two checkpointed index frames plus the build
     params (search validates against them):
     - ``listed``: (id, vec, q8, list_id, __codes) — the int8-quantized
       corpus with coarse list assignment and PQ code array; the
@@ -940,10 +934,10 @@ def build_ivf_pq_index(
     - ``centroids``: the bounded (m, code, j) -> integer centroid
       table (<= m_subs * 2^d_sub * d_sub rows) ADC LUTs are built from.
 
-    CALLER OWNS THE CACHES: call
-    ``release_frames([idx["listed"], idx["centroids"]])`` (or
-    ``release_all_persistent``) when done — exactly the FAISS
-    "free the index" step."""
+    Both frames are owned by the calling thread (util.own): call
+    ``util.release([idx["listed"], idx["centroids"]])`` (or
+    ``util.release()`` at the query boundary) once every search over
+    them is materialized — exactly the FAISS "free the index" step."""
     q8c = (
         quantize_int8(corpus, vec_col=vec_col)
         .filter(F.col("q8").isNotNull())
@@ -985,19 +979,13 @@ def build_ivf_pq_index(
     # each computing the deep codegen for itself. One eager
     # materialization at build time is the FAISS "train once" step —
     # the cost is one corpus pass either way, now paid exactly once.
-    # Blocks are freed by release_frames (checkpoint-aware since r15),
-    # keeping the caller-owns-the-release contract.
-    from ..util import tracked_cache
+    # Both frames are owned by the calling thread; the caller releases.
+    from ..util import own
 
-    _pin = (
-        (lambda df: df.localCheckpoint(eager=True))
-        if freeze
-        else tracked_cache
-    )
-    listed = _pin(
+    listed = own(
         sign_quantize(q8c, vec_col=vec_col, n_bits=n_bits).withColumn(
             "__codes", codes_arr
-        )
+        ).localCheckpoint(eager=True)
     )
     # codebook: per-(m, code, j) integer truncated means — ONE bounded
     # corpus pass (explode to dims, <= m_subs * 2^d_sub * d_sub output)
@@ -1013,10 +1001,10 @@ def build_ivf_pq_index(
             F.expr(f"slice(q8, s.m * {d_sub} + 1, {d_sub})")
         ).alias("j", "v"),
     ).withColumn("v", F.col("v").cast("long"))
-    cent = _pin(
+    cent = own(
         dims.groupBy("m", "code", "j").agg(
             F.expr("sum(v) div count(1)").alias("c")
-        )
+        ).localCheckpoint(eager=True)
     )
     return {
         "listed": listed,
@@ -1260,7 +1248,8 @@ def ivf_pq_topk(
     # (a NULL l2 in the audit would otherwise rank FIRST under Spark's
     # ASC NULLS FIRST and silently deflate in_exact_topk); the
     # oracle's `WHERE embedding IS NOT NULL` mirrors this exactly.
-    from ..util import release_frames
+    from ..util import own, release
+
     index = build_ivf_pq_index(
         corpus,
         n_bits=n_bits,
@@ -1277,15 +1266,15 @@ def ivf_pq_topk(
         probe_flips=probe_flips,
         refine_mult=refine_mult,
     )
-    # Scoped cache release (ADVICE r11): this call pinned two
-    # corpus-sized index frames; a correctness driver runs 50
-    # registered queries in ONE JVM and never calls release_cached, so
-    # leaving them pinned accumulates an index per window run. The
-    # output is <= k rows per query — eagerly localCheckpoint it (one
-    # bounded job, the blocks ARE the result) and unpersist exactly
-    # the frames this call built; callers that want to amortize the
-    # build across query batches use build_ivf_pq_index +
-    # ivf_pq_search directly and own the release.
-    out = out.localCheckpoint(eager=True)
-    release_frames([index["listed"], index["centroids"]])
+    # Scoped release (ADVICE r11): this call pinned two corpus-sized
+    # index frames; a correctness driver runs 50 registered queries in
+    # ONE JVM and never releases, so leaving them pinned accumulates
+    # an index per window run. The output is <= k rows per query —
+    # eagerly localCheckpoint it (one bounded job, the blocks ARE the
+    # result, owned by the caller's thread) and release exactly the
+    # frames this call built; callers that want to amortize the build
+    # across query batches use build_ivf_pq_index + ivf_pq_search
+    # directly and own the release.
+    out = own(out.localCheckpoint(eager=True))
+    release([index["listed"], index["centroids"]])
     return out

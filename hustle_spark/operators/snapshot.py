@@ -84,7 +84,7 @@ def vocab_drift(
         # op counts — 'The' vs 'the' is casing, not drift
         from ..functions.text import tokens
 
-        from ..util import tracked_cache
+        from ..util import own
 
         toks = df.select(
             F.explode(tokens(F.lower(F.col(text)))).alias("token")
@@ -94,8 +94,8 @@ def vocab_drift(
         # replays the full corpus explode (the unigram_fppm_vocab
         # lesson from round 4, caught again by the round-5 plan
         # scan-count sweep: vocab_drift_top showed 6 corpus scans)
-        counts = tracked_cache(
-            toks.groupBy("token").agg(F.count(F.lit(1)).alias("__c"))
+        counts = own(
+            toks.groupBy("token").agg(F.count(F.lit(1)).alias("__c")).cache()
         )
         total = counts.agg(
             F.greatest(F.sum("__c"), F.lit(1)).alias("__total")

@@ -2840,10 +2840,11 @@ def q15_top_supplier(spark, sf_dir):
     while the cached two-agg stays tree-aggregated and spillable."""
     c = _cat(spark, sf_dir)
     li, s = c.table("lineitem").df, c.table("supplier").df
-    rev = _util.tracked_cache(
+    rev = _util.own(
         li.filter((F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01"))
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(F.sum(_dec("l_extendedprice") * (F.lit(1) - _dec("l_discount"))).alias("total_rev"))
+        .cache()
     )
     mx = rev.agg(F.max("total_rev").alias("mx"))
     return (
@@ -5655,7 +5656,7 @@ def bpe_merge_rounds(spark, sf_dir):
     just the chosen pairs."""
     d = _cat(spark, sf_dir).table("documents").df
     merges, final = TX.bpe_learn_merges(d, n_merges=3)
-    final.unpersist()
+    _util.release([final])
     return spark.createDataFrame(
         merges, "round int, a string, b string, pair_count bigint, "
         "total_tokens_after bigint",
@@ -5726,7 +5727,7 @@ def bpe_tokenizer_roundtrip(spark, sf_dir):
         spark,
     )
     merges, final = TX.bpe_learn_merges(d, n_merges=3)
-    final.unpersist()
+    _util.release([final])
     exported = [(m[1], m[2]) for m in merges]
     enc = TX.bpe_encode(d, merges=exported)
     return enc.select(
@@ -6786,12 +6787,12 @@ def lang_profiles_file_roundtrip(spark, sf_dir):
     cat = _cat(spark, sf_dir)
     path = Path(str(cat.scratch)) / "lang_profiles_roundtrip.tsv"
     path.parent.mkdir(parents=True, exist_ok=True)
-    # tracked-cache the spread doc frame (r14): the fit/dump collect
+    # cache the spread doc frame (r14): the fit/dump collect
     # and the classify action are SEPARATE jobs here (unlike
     # text_lang_id_trigram's single action), so uncached each replays
     # the spread shuffle + scan
-    d = _util.tracked_cache(
-        _util.spread_input(cat.table("documents").df, spark)
+    d = _util.own(
+        _util.spread_input(cat.table("documents").df, spark).cache()
     )
     profiles = TX.lang_profiles_trigram(
         d.filter(F.col("doc_id") % 2 == 0), top_k=64

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import functools
+import threading
 from urllib.parse import unquote, urlparse
 
 _UNIT_SECONDS = {
@@ -32,92 +34,94 @@ def interval_seconds(spec: str) -> float:
     return total
 
 
-# --- tracked caching ------------------------------------------------------
+# --- frame ownership -----------------------------------------------------
 #
-# Operators that reuse an intermediate frame in two plan branches (dedup
-# signatures, q15's revenue view) cache it so one action computes it
-# once. The JVM-side cache outlives the Python wrapper, so frames are
-# tracked here and released explicitly (benchmarks call release_cached()
-# between queries to keep storage flat). Strong refs on purpose.
+# Operators that reuse an intermediate frame in two plan branches cache
+# or eagerly localCheckpoint it so one action computes it once. The
+# JVM-side blocks outlive the Python wrapper, so every such frame is
+# registered with the calling thread's owner and freed only by
+# release() (Spark SQL's cache manager contract: an explicit persist
+# paired with an explicit unpersist on the same owner). One owner per
+# thread, so a thread's release() frees only frames it registered
+# (see release() for caches with equal plans). Strong refs on purpose.
 
-_CACHED: list = []
+_OWNER = threading.local()
 
 
-def tracked_cache(df):
-    df = df.cache()
-    _CACHED.append(df)
+def _owned() -> list:
+    """The calling thread's owned (frame, checkpoint RDD or None) pairs."""
+    if not hasattr(_OWNER, "frames"):
+        _OWNER.frames = []
+    return _OWNER.frames
+
+
+def is_checkpoint(df) -> bool:
+    """True when ``df``'s analyzed plan is a ``LogicalRDD`` leaf, the
+    shape ``localCheckpoint()`` returns."""
+    return df._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
+
+
+def own(df):
+    """Register ``df`` with the calling thread's owner and return it.
+
+    ``df`` must be the result of ``.cache()``/``.persist()`` or of
+    ``.localCheckpoint()``; anything else raises ``ValueError``, as does
+    owning a frame twice. For a checkpoint the RDD behind the leaf is
+    read here, through the private
+    ``queryExecution().analyzed().rdd()`` seam (``df.unpersist()`` is
+    a no-op on a checkpoint); a seam that stops working raises too.
+
+    The owner frees the frame only in :func:`release`. Releasing a
+    cache drops it and Spark recomputes on next use. Releasing a
+    checkpoint deletes the only copy of its rows: a consumer that has
+    not materialized yet then fails (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND),
+    it does not recompute. Release a checkpoint only once every
+    consumer is materialized (an eager checkpoint, a collect)."""
+    from pyspark import StorageLevel
+
+    owned = _owned()
+    if any(f is df for f, _ in owned):
+        raise ValueError("own: frame already owned by this thread")
+    if df.storageLevel != StorageLevel.NONE:
+        rdd = None
+    elif is_checkpoint(df):
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        if not rdd.getStorageLevel().isValid():
+            raise ValueError("own: the checkpoint's RDD holds no blocks")
+    else:
+        raise ValueError("own: frame is neither cached nor a localCheckpoint")
+    owned.append((df, rdd))
     return df
 
 
-def release_frames(frames) -> int:
-    """Unpersist a SPECIFIC set of tracked frames (identity match) and
-    drop them from the tracking list — the scoped twin of
-    release_cached() for operators that pin corpus-sized intermediates
-    for their own plan branches only (ADVICE r11: ivf_pq_topk pinned
-    three frames per call with no release inside the registered path,
-    so correctness drivers that never call release_cached accumulated
-    corpus-sized caches across a 50-query window). Callers release
-    AFTER the consuming output is materialized (eager localCheckpoint
-    or collect) — unpersisting earlier would silently recompute."""
-    n = 0
-    ids = {id(f) for f in frames}
-    for f in frames:
-        try:
-            f.unpersist()
-            n += 1
-        except Exception:
-            pass
-        # localCheckpoint()ed frames: df.unpersist() is a no-op — the
-        # blocks belong to the materialized RDD behind the plan's
-        # LogicalRDD leaf and otherwise free only when the lazy
-        # ContextCleaner GCs it (r15; ADVICE r14 on the CC edge
-        # checkpoint). Release them NOW; the probe throws on any
-        # non-checkpoint plan and is ignored. Only safe once every
-        # consumer of the frame is done — same contract as unpersist.
-        try:
-            f._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
-    _CACHED[:] = [f for f in _CACHED if id(f) not in ids]
-    return n
-
-
-def release_cached() -> int:
-    """Unpersist every tracked frame; returns how many were released.
-    Safe any time — Spark recomputes on next use."""
-    n = 0
-    while _CACHED:
-        df = _CACHED.pop()
-        try:
+def release(frames=None) -> int:
+    """Free ``frames``, or every frame the calling thread owns when
+    None; returns how many were freed. A frame this thread does not
+    own (released twice, or owned by another thread) raises
+    ``ValueError`` before anything is freed. A cache goes through
+    ``df.unpersist()``, a checkpoint through its RDD's ``unpersist``;
+    see :func:`own` for when a checkpoint may be released. Spark keys
+    caches by plan, so two owned frames with equal plans share one
+    cache, and releasing either uncaches both (a recompute, never a
+    wrong result)."""
+    owned = _owned()
+    held = {id(f): (f, rdd) for f, rdd in owned}
+    ids = list(held) if frames is None else [id(f) for f in frames]
+    picked = [held.pop(i, None) for i in ids]
+    if None in picked:
+        raise ValueError("release: frame not owned by this thread")
+    owned[:] = held.values()
+    for df, rdd in picked:
+        if rdd is None:
             df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+        else:
+            rdd.unpersist(False)
+    return len(picked)
 
 
 def release_all_persistent(spark) -> int:
-    """BETWEEN-QUERY cleanup for benches/probes: unpersist every RDD
-    the context still tracks — tracked caches AND the block footprint
-    of localCheckpoint()ed frames, which otherwise free only when the
-    lazy ContextCleaner gets to them after GC. The r8 sf1 lesson: two
-    suffix-array queries back-to-back in one 8g JVM OOMed because the
-    first query's checkpoint blocks were still being cleaned while the
-    second query's sort buffers grew (each query alone fit). NOT safe
-    mid-query — a live localCheckpoint consumer would recompute a
-    NON-DETERMINISTIC partition splice (the freeze-before-collect
-    contract in global_dense_rank); callers use it only at query
-    boundaries, where every consumer is done."""
-    n = release_cached()
-    try:
-        jsc = spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().values().iterator()
-        while it.hasNext():
-            it.next().unpersist(True)
-            n += 1
-    except Exception:
-        pass
-    return n
+    """Query-boundary cleanup for benches and probes: :func:`release`."""
+    return release()
 
 
 def spread_input(df, spark):
@@ -141,9 +145,18 @@ def spread_input(df, spark):
 # class as Spark's own file-listing cache, guide section 6), never
 # query results — reading a footer costs ~1 ms; the memo only avoids
 # re-stat()ing the same files across the many probe rows of one run.
-# Only successful reads are kept, so a transient failure costs one
-# fallback, not the rest of the session.
-_FOOTER_ROWS: dict = {}
+# lru_cache keeps no raised read, so a transient failure costs one
+# fallback, not the rest of the session; the cap bounds a long-lived
+# session that sizes many distinct inputs.
+@functools.lru_cache(maxsize=128)
+def _footer_rows(files: tuple) -> int:
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(_local_path(f)).metadata.num_rows
+        for f in files
+        if f.endswith(".parquet")
+    )
 
 
 def _local_path(uri: str) -> str:
@@ -175,19 +188,10 @@ def stat_partitions(df, spark, rows_per_task: int = 512) -> int:
         return par
     if not files:
         return par
-    n_rows = _FOOTER_ROWS.get(files)
-    if n_rows is None:
-        try:
-            import pyarrow.parquet as pq
-
-            n_rows = sum(
-                pq.ParquetFile(_local_path(f)).metadata.num_rows
-                for f in files
-                if f.endswith(".parquet")
-            )
-        except Exception:  # a sizing probe: never fail the query
-            return par
-        _FOOTER_ROWS[files] = n_rows
+    try:
+        n_rows = _footer_rows(files)
+    except Exception:  # a sizing probe: never fail the query
+        return par
     if not n_rows:
         return par
     return max(1, min(par, math.ceil(n_rows / rows_per_task)))
@@ -237,9 +241,9 @@ def global_dense_rank(df, cols: list, out: str, checkpoint_storage=None):
     # the offsets job and every later consumer MUST read one frozen
     # materialization of (__pid, __lr) — recomputing the shuffle could
     # assign different partition ids and splice garbage ranks
-    d = d.withColumn("__lr", F.dense_rank().over(w)).localCheckpoint(
+    d = own(d.withColumn("__lr", F.dense_rank().over(w)).localCheckpoint(
         eager=True, storageLevel=checkpoint_storage
-    )
+    ))
     # bounded collect: one row per non-empty partition
     per = sorted(
         (r["__pid"], r["__cnt"])
@@ -283,9 +287,9 @@ def global_running_sum(df, order_col: str, val_col: str, out: str,
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     # same freeze-before-collect contract as _global_dense_rank
-    d = d.withColumn("__ls", F.sum(val_col).over(w)).localCheckpoint(
+    d = own(d.withColumn("__ls", F.sum(val_col).over(w)).localCheckpoint(
         eager=True, storageLevel=checkpoint_storage
-    )
+    ))
     per = sorted(
         (r["__pid"], r["__tot"])
         for r in d.groupBy("__pid").agg(F.sum(val_col).alias("__tot")).collect()

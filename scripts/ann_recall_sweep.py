@@ -33,7 +33,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from hustle_spark.session import get_session  # noqa: E402
 from hustle_spark.operators import similarity  # noqa: E402
-from hustle_spark.util import release_cached  # noqa: E402
+from hustle_spark.util import release  # noqa: E402
 
 N_BITS = 4
 
@@ -84,7 +84,7 @@ def sweep(spark, corpus, label: str, k: int = 5):
             corpus, qs, k=k, probe_flips=flips
         ).collect()
         wall = time.time() - t0
-        release_cached()
+        release()
         rec = {
             "corpus": label,
             "probes": name,
@@ -113,7 +113,7 @@ def refine_leg(spark, corpus, label: str, k: int = 5):
             corpus, qs, k=k, probe_flips=PROBE_SETS["all"], refine_mult=mult
         ).collect()
         wall = time.time() - t0
-        release_cached()
+        release()
         print(json.dumps({
             "corpus": label,
             "probes": "all",

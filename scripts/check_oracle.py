@@ -18,6 +18,7 @@ import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 from hustle_spark.session import get_session  # noqa: E402
+from hustle_spark.util import release  # noqa: E402
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -172,6 +173,8 @@ def main():
             failures.append((name, f"SPARK ERROR: {type(e).__name__}: {str(e)[:300]}"))
             print(f"  FAIL {name}: spark error")
             continue
+        finally:
+            release()  # query boundary: free the query's caches and checkpoints
         dt = time.time() - t0
         if name not in oracles:
             rows_only += 1

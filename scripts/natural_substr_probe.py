@@ -169,7 +169,7 @@ def probe() -> dict:
         # dedup_exact_substr_combined)
         d = _util.spread_input(d.select("doc_id", "text"), spark)
         s1 = dedup.repeated_span_removal(d, span=16, min_docs=2)
-        mid = s1.select("doc_id", "text").localCheckpoint()
+        mid = _util.own(s1.select("doc_id", "text").localCheckpoint())
         return suffixes.repeated_substring_removal(
             mid, min_len=24, min_docs=2, prefix_cap=24
         ).select("doc_id", "text", "n_chars", "n_removed")

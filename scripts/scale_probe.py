@@ -49,8 +49,8 @@ def time_queries(sf_dir: str, names: list[str]) -> dict[str, float]:
                     action = None
                 (action.collect() if action is not None else df.collect())
                 best = min(best, time.monotonic() - t0)
-                # full sweep incl. lingering localCheckpoint blocks (the r8
-                # sf1 OOM: back-to-back SA queries in one 8g JVM)
+                # free the query's caches and checkpoints (the r8 sf1
+                # OOM: back-to-back SA queries in one 8g JVM)
                 release_all_persistent(spark)
             out[name] = round(best, 3)
         except Exception as exc:

@@ -17,6 +17,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pyspark.sql import functions as F
 
 from hustle_spark.session import get_session
+from hustle_spark.util import release
 
 SCRATCH = Path("/root/repo/.scratch/stress")
 
@@ -258,7 +259,7 @@ def main():
 
     def bpe3():
         merges, final = bpe_learn_merges(docs, n_merges=3)
-        final.unpersist()
+        release([final])
         return len(merges)
 
     timed("BPE 3 merge rounds 100k", bpe3)
@@ -316,8 +317,7 @@ def main():
         f"{cc_stats['iterations']} iterations (log2({chain_len})+3 bound={log_bound}), "
         f"{dt:.1f}s  {'OK' if ok else '** FAILED O(log n) convergence **'}"
     )
-    from hustle_spark.util import release_cached
-    release_cached()
+    release()
 
     # pathological skew: 30% of events on ONE user joined to a per-user dim
     from hustle_spark.plans import salted_join

@@ -339,3 +339,12 @@ def jpeg_encode_gray(blocks, bw, bh, mode="sequential", scans=None,
         out += sink.flush()
     out += b"\xff\xd9"
     return bytes(out)
+
+
+def persistent_rdd_ids(spark) -> set:
+    """Ids of the RDDs the JVM holds persisted: caches and checkpoints."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(int(it.next()))
+    return ids

@@ -175,6 +175,24 @@ def test_order_by_position_and_star(catalog, duck):
     assert rows == duck_rows
 
 
+def test_nest_without_catalog_is_owned_and_released(spark):
+    """A nest=True select with no catalog caches its result in memory;
+    that cache is owned by the calling thread and release() frees it."""
+    from pyspark import StorageLevel
+
+    from hustle_spark import util
+
+    t = h.Table("t", spark.createDataFrame(
+        [(1, 2.0), (1, 3.0), (2, 5.0)], "k long, v double"))
+    util.release()
+    nested = h.select(t.k, h.h_sum(t.v).alias("total"), nest=True)
+    (cached,) = [f for f, _ in util._owned()]
+    assert cached.storageLevel != StorageLevel.NONE
+    assert sorted(tuple(r) for r in nested.df.collect()) == [(1, 5.0), (2, 5.0)]
+    assert util.release() == 1
+    assert cached.storageLevel == StorageLevel.NONE
+
+
 def test_nest_materialize_requery(catalog, duck):
     ev = catalog.table("events")
     nested = h.select(

@@ -76,6 +76,7 @@ def test_round4_operators_empty_inputs(spark):
 
 
 def test_pipeline_operators_empty_inputs(spark):
+    from hustle_spark import util
     from hustle_spark.functions.text import drop_boilerplate_paragraphs
     from hustle_spark.operators import dedup
 
@@ -85,7 +86,7 @@ def test_pipeline_operators_empty_inputs(spark):
     one = spark.createDataFrame([(1, "solo doc")], "doc_id long, text string")
     r = dedup.dedup_pipeline(one).collect()
     assert [(x.doc_id, x.cluster_id, x.is_kept) for x in r] == [(1, 1, True)]
-    dedup.release_cached()
+    util.release()
 
 
 # ---------------------------------------------------------------------

@@ -3,9 +3,12 @@ text, multimodal — small inline DataFrames with hand-checked expecteds
 (the reference's golden-in-code test style, SURVEY section 5)."""
 
 import datetime as dt
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
+
+from helpers import persistent_rdd_ids
 
 
 def ts(s):
@@ -693,16 +696,18 @@ def test_lsh_signature_methods_agree(spark):
 
 
 def test_dedup_release_cached(spark):
+    from hustle_spark import util
     from hustle_spark.operators import dedup
 
+    util.release()
     df = spark.createDataFrame(
         [(i, f"tok{i} tok{i+1} tok{i+2} tok{i+3}") for i in range(20)],
         "doc_id long, text string",
     )
     dedup.minhash_lsh_pairs(df, n_hashes=8, bands=4).count()
     dedup.simhash_near_pairs(df).count()
-    assert dedup.release_cached() >= 2
-    assert dedup.release_cached() == 0  # idempotent
+    assert util.release() >= 2
+    assert util.release() == 0  # idempotent
 
 
 def test_text_functions(spark):
@@ -2136,19 +2141,21 @@ def test_ivf_topk_recall(spark):
 
 
 def test_connected_components_chain_merge(spark):
-    from hustle_spark.operators.dedup import connected_components, release_cached
+    from hustle_spark.operators.dedup import connected_components
+    from hustle_spark.util import release
 
     # two components: a chain 1-2-3-4 (no direct 1~4 edge) and pair 10-11
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "a long, b long"
     )
     out = {r.id: r.cluster_id for r in connected_components(edges).collect()}
-    release_cached()
+    release()
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
 def test_connected_components_long_chain_converges(spark):
-    from hustle_spark.operators.dedup import connected_components, release_cached
+    from hustle_spark.operators.dedup import connected_components
+    from hustle_spark.util import release
 
     # 40-node path graph: pointer jumping must converge in O(log n)
     # iterations, far below the max_iterations guard
@@ -2160,7 +2167,7 @@ def test_connected_components_long_chain_converges(spark):
         r.id: r.cluster_id
         for r in connected_components(edges, max_iterations=12, stats=stats).collect()
     }
-    release_cached()
+    release()
     assert set(out.values()) == {0} and len(out) == 41
     # pointer jumping: 41-node path converges within ceil(log2(41))+3
     assert stats["converged"] and stats["iterations"] <= 9, stats
@@ -2478,6 +2485,7 @@ def test_dedup_pipeline_canonical_selection(spark):
     """Pairs -> clusters -> one survivor: the chain a~b~c collapses to
     one cluster even without an a~c pair; the highest-quality doc wins,
     ties to lowest id; singletons are kept."""
+    from hustle_spark import util
     from hustle_spark.operators import dedup
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
@@ -2501,7 +2509,7 @@ def test_dedup_pipeline_canonical_selection(spark):
     again = {r.doc_id: (r.cluster_id, r.is_kept) for r in dedup.dedup_pipeline(
         df, threshold=0.3).collect()}
     assert again == out
-    dedup.release_cached()
+    util.release()
 
 
 def test_resize_image_features_matches_model(spark):
@@ -3369,7 +3377,7 @@ def test_tfidf_score_from_frame_equals_tfidf_topk(spark):
         tfidf_score_from_frame,
         tfidf_topk,
     )
-    from hustle_spark.util import release_cached
+    from hustle_spark.util import release
 
     docs = [
         (1, "alpha beta gamma alpha"),
@@ -3391,7 +3399,7 @@ def test_tfidf_score_from_frame_equals_tfidf_topk(spark):
         (r.query_id, r.doc_id): (r.score, r.rnk)
         for r in tfidf_score_from_frame(frame, k=4).collect()
     }
-    release_cached()
+    release()
     assert shared == base and len(base) > 0
 
 
@@ -3479,24 +3487,25 @@ def test_ivf_pq_topk_null_and_zero_vectors(spark):
 
 
 def test_ivf_pq_topk_releases_its_caches(spark):
-    """ADVICE r11: ivf_pq_topk pins three corpus-sized tracked caches
-    per call; the registered path must RELEASE them before returning
-    (scoped release after the eager checkpoint) so a 50-query
+    """ADVICE r11: ivf_pq_topk pins two corpus-sized index frames per
+    call; the registered path must RELEASE them before returning
+    (scoped release after the eager output checkpoint) so a 50-query
     correctness window in one JVM does not accumulate an index per
-    run. The returned frame stays usable after release (it reads the
-    checkpoint blocks, not the caches)."""
+    run. Only the output checkpoint stays owned, and it stays usable
+    (it reads its own blocks, not the index)."""
     from hustle_spark import util
     from hustle_spark.operators.similarity import ivf_pq_topk
 
-    util.release_cached()  # start from a clean tracking list
+    util.release()  # start from an empty owner
     df = spark.createDataFrame(
         [(i, [float((i * 7 + d) % 13 - 6) for d in range(64)])
          for i in range(30)],
         "vec_id long, embedding array<float>",
     )
     out = ivf_pq_topk(df, df.filter("vec_id < 2"), k=3)
-    assert len(util._CACHED) == 0  # nothing left pinned by the call
+    assert [f for f, _ in util._owned()] == [out]
     assert out.count() > 0  # still materializable post-release
+    assert util.release() == 1
 
 
 def test_ivf_pq_build_search_split_matches_topk(spark):
@@ -3504,7 +3513,7 @@ def test_ivf_pq_build_search_split_matches_topk(spark):
     equal the one-shot ivf_pq_topk row-for-row (the FAISS build/search
     amortization cannot change results), a SECOND search against the
     SAME index must equal the first (the index is reusable, not
-    consumed), and search itself must pin no new caches (lazy,
+    consumed), and search itself must pin nothing (lazy,
     side-effect-free — the caller owns exactly the two index frames)."""
     from hustle_spark import util
     from hustle_spark.operators.similarity import (
@@ -3520,53 +3529,81 @@ def test_ivf_pq_build_search_split_matches_topk(spark):
     want = sorted(
         tuple(r) for r in ivf_pq_topk(df, qs, k=3).collect()
     )
-    util.release_cached()
+    util.release()
     idx = build_ivf_pq_index(df)
-    # r15 contract: the index frames are EAGER localCheckpoints, not
-    # tracked caches — build pins nothing in _CACHED, both frames are
-    # checkpoint leaves (plan = Scan ExistingRDD, already materialized)
-    assert len(util._CACHED) == 0
-    for key in ("listed", "centroids"):
-        assert "LogicalRDD" in (
-            idx[key]._jdf.queryExecution().analyzed().toString()
-        )
+    # the index frames are EAGER localCheckpoints (plan = a LogicalRDD
+    # leaf, already materialized), both owned by this thread
+    index = [idx["listed"], idx["centroids"]]
+    assert [f for f, _ in util._owned()] == index
+    assert all(util.is_checkpoint(f) for f in index)
     got1 = sorted(tuple(r) for r in ivf_pq_search(idx, qs, k=3).collect())
-    assert len(util._CACHED) == 0  # search pinned nothing new
+    assert len(util._owned()) == 2  # search pinned nothing new
     got2 = sorted(tuple(r) for r in ivf_pq_search(idx, qs, k=3).collect())
     assert got1 == want and got2 == want
-    # release_frames is checkpoint-aware (r15): it must actually free
-    # the materialized RDD blocks, not just no-op on the unpersist
-    sc = spark.sparkContext
-    before = sc._jsc.sc().getPersistentRDDs().size()
-    util.release_frames([idx["listed"], idx["centroids"]])
-    after = sc._jsc.sc().getPersistentRDDs().size()
-    assert after <= before - 2
-    # freeze=False keeps the pre-r15 lazy tracked-cache contract the
-    # plan-audit variants rely on, with identical results
-    lazy_idx = build_ivf_pq_index(df, freeze=False)
-    assert len(util._CACHED) == 2  # exactly listed + centroids
-    got3 = sorted(
-        tuple(r) for r in ivf_pq_search(lazy_idx, qs, k=3).collect()
-    )
-    assert got3 == want
-    assert util.release_frames(
-        [lazy_idx["listed"], lazy_idx["centroids"]]
-    ) == 2
+    # releasing a checkpoint frees its RDD's blocks, not a no-op
+    # df.unpersist()
+    rdds = {rdd.id() for _, rdd in util._owned()}
+    assert rdds <= persistent_rdd_ids(spark)
+    assert util.release(index) == 2
+    assert not rdds & persistent_rdd_ids(spark)
 
 
 def test_release_frames_scoped(spark):
-    """release_frames unpersists ONLY the frames it is given and
-    leaves other tracked caches pinned."""
+    """release(frames) unpersists ONLY the frames it is given and
+    leaves the thread's other owned frames cached; releasing a frame
+    twice raises."""
     from hustle_spark import util
 
-    util.release_cached()
-    a = util.tracked_cache(spark.range(5))
-    b = util.tracked_cache(spark.range(7))
+    util.release()
+    a = util.own(spark.range(5).cache())
+    b = util.own(spark.range(7).cache())
     a.count(), b.count()
-    assert util.release_frames([a]) == 1
-    assert [id(f) for f in util._CACHED] == [id(b)]
+    assert util.release([a]) == 1
+    assert [f for f, _ in util._owned()] == [b]
     assert b.storageLevel.useMemory  # untouched
-    util.release_cached()
+    assert not a.storageLevel.useMemory
+    with pytest.raises(ValueError, match="not owned"):
+        util.release([a])
+    with pytest.raises(ValueError, match="neither cached"):
+        util.own(spark.range(3))
+    util.release()
+
+
+def test_own_checkpoint_seam(spark):
+    """own() reads a checkpoint's RDD through the private
+    queryExecution().analyzed().rdd() seam. A seam that fails must
+    raise, and release() must drop the RDD from the JVM's persistent
+    set: a Spark upgrade that breaks either fails here."""
+    from hustle_spark import util
+
+    util.release()
+    cp = spark.range(6).localCheckpoint(eager=True)
+    real = cp._jdf
+
+    class Plan:
+        def nodeName(self):
+            return real.queryExecution().analyzed().nodeName()
+
+        def rdd(self):
+            raise RuntimeError("seam gone")
+
+    class Jdf:
+        def __getattr__(self, name):
+            return getattr(real, name)
+
+        def queryExecution(self):
+            return SimpleNamespace(analyzed=Plan)
+
+    cp._jdf = Jdf()
+    with pytest.raises(RuntimeError, match="seam gone"):
+        util.own(cp)
+    cp._jdf = real
+    assert util._owned() == []
+    util.own(cp)
+    rdd_id = util._owned()[0][1].id()
+    assert rdd_id in persistent_rdd_ids(spark)
+    assert util.release() == 1
+    assert rdd_id not in persistent_rdd_ids(spark)
 
 
 def test_stat_partitions_retries_a_failed_footer_read(tmp_path, monkeypatch):
@@ -3594,6 +3631,20 @@ def test_stat_partitions_retries_a_failed_footer_read(tmp_path, monkeypatch):
         assert util.stat_partitions(df, spark) == 8
         monkeypatch.setattr(pq, "ParquetFile", real)
         assert util.stat_partitions(df, spark) == 2  # ceil(1000 / 512)
+
+
+def test_stat_partitions_footer_memo_is_bounded():
+    """The footer memo keeps at most its cap of file tuples, however
+    many distinct inputs one session sizes."""
+    from hustle_spark import util
+
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=8))
+    cap = util._footer_rows.cache_info().maxsize
+    for i in range(cap + 5):
+        # no parquet file among the inputs: 0 rows, the fallback
+        df = SimpleNamespace(inputFiles=lambda i=i: [f"file:/in/part-{i}.json"])
+        assert util.stat_partitions(df, spark) == 8
+    assert util._footer_rows.cache_info().currsize <= cap
 
 
 def test_dsir_importance_null_and_empty_text(spark):

@@ -112,8 +112,26 @@ STREAMING = {name for name in registry.QUERIES if name.startswith("streaming_")}
 # Scan ExistingRDD, which would make the audit VACUOUS (review finding
 # r12 — a future cartesian or Python-stage regression in the pipeline
 # would be invisible). For these, the audit rebuilds the SAME pipeline
-# lazily via the public split API and inspects THAT plan; caches the
-# build pins are released at the end of the check.
+# via the public split API with every checkpoint replaced by identity
+# (_without_checkpoints), and inspects THAT plan.
+def _without_checkpoints(build):
+    """Run ``build(spark, sf_dir)`` with ``DataFrame.localCheckpoint``
+    and ``util.own`` as identity, so the index frames stay lazy and
+    the audited plan carries the full build subtree."""
+    from hustle_spark import util
+
+    def lazy(spark, sf_dir):
+        with pytest.MonkeyPatch.context() as mp:
+            # the session's concrete DataFrame class, which overrides
+            # the pyspark.sql.DataFrame base method
+            frame_cls = type(spark.range(0))
+            mp.setattr(frame_cls, "localCheckpoint", lambda self, *a, **k: self)
+            mp.setattr(util, "own", lambda df: df)
+            return build(spark, sf_dir)
+
+    return lazy
+
+
 def _lazy_ann_ivf_pq_search(spark, sf_dir):
     from hustle_spark.operators.similarity import (
         build_ivf_pq_index, ivf_pq_search,
@@ -123,9 +141,7 @@ def _lazy_ann_ivf_pq_search(spark, sf_dir):
     e = _cat(spark, sf_dir).table("embeddings").df.select(
         "vec_id", "embedding"
     )
-    # freeze=False: the audit must see the full build subtree,
-    # not the production eager-checkpoint leaf (r15)
-    idx = build_ivf_pq_index(e, freeze=False)
+    idx = build_ivf_pq_index(e)
     return ivf_pq_search(idx, e.filter("vec_id < 5"), k=5)
 
 
@@ -140,8 +156,7 @@ def _lazy_ann_ivf_pq_batched(spark, sf_dir):
     e = _cat(spark, sf_dir).table("embeddings").df.select(
         "vec_id", "embedding"
     )
-    # freeze=False: see _lazy_ann_ivf_pq_search (r15)
-    idx = build_ivf_pq_index(e, freeze=False)
+    idx = build_ivf_pq_index(e)
     return (
         ivf_pq_search(idx, e.filter("vec_id < 5"), k=5)
         .withColumn("batch", F.lit(1).cast("bigint"))
@@ -156,8 +171,8 @@ def _lazy_ann_ivf_pq_batched(spark, sf_dir):
 
 
 LAZY_PLAN_VARIANTS = {
-    "ann_ivf_pq_search": _lazy_ann_ivf_pq_search,
-    "ann_ivf_pq_batched": _lazy_ann_ivf_pq_batched,
+    "ann_ivf_pq_search": _without_checkpoints(_lazy_ann_ivf_pq_search),
+    "ann_ivf_pq_batched": _without_checkpoints(_lazy_ann_ivf_pq_batched),
 }
 
 
@@ -193,7 +208,7 @@ def test_lazy_variants_match_registered_parameters():
 
 
 def _audited_frame(name, fn, spark, sf_dir, variants):
-    from hustle_spark.util import release_all_persistent
+    from hustle_spark.util import release
 
     df = variants.get(name, fn)(spark, sf_dir)
     plan = explain_str(df)
@@ -202,7 +217,7 @@ def _audited_frame(name, fn, spark, sf_dir, variants):
             f"{name}: the lazy audit variant itself checkpoints — "
             "the audit is vacuous again"
         )
-        release_all_persistent(spark)
+    release()
     return plan
 
 

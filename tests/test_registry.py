@@ -6,7 +6,8 @@ import pytest
 
 import __spark_entry__ as entrymod
 
-from helpers import assert_df_matches_duck
+from conftest import SF_DIR
+from helpers import assert_df_matches_duck, persistent_rdd_ids
 
 
 def test_entry_smoke(spark):
@@ -22,7 +23,10 @@ ORACLES = entrymod.oracle_sql()
 
 @pytest.mark.parametrize("name", ALL)
 def test_query_vs_oracle(name, spark, duck, catalog):
+    from hustle_spark import util
+
     fn = entrymod.queries()[name]
+    before = persistent_rdd_ids(spark)
     df = fn(spark, "/root/testdata/sf0.001")
     if name in ORACLES:
         assert_df_matches_duck(df, duck, ORACLES[name])
@@ -30,6 +34,67 @@ def test_query_vs_oracle(name, spark, duck, catalog):
         rows = df.collect()
         assert rows is not None  # rows-only contract: runs, stable schema
         assert len(df.columns) > 0
+    # every cache and checkpoint the query made is owned: release()
+    # returns the JVM's persistent RDD set to its pre-query state
+    util.release()
+    left = persistent_rdd_ids(spark) - before
+    assert not left, f"{name}: persistent RDDs left after release: {left}"
+
+
+def test_release_is_per_thread(spark, duck):
+    """Two threads build cached rows in one session; one thread's
+    release() frees only its own frames. B's signature cache stays
+    cached while A releases, and both rows match their oracles."""
+    import threading
+
+    from pyspark import StorageLevel
+
+    from hustle_spark import registry, util
+
+    sf = SF_DIR
+    registry._cat(spark, sf)  # build the shared catalog memo up front
+    b_built, a_released = threading.Event(), threading.Event()
+    out, errors = {}, []
+
+    def run(name, body):
+        try:
+            body(name)
+        except Exception as exc:  # re-raised in the main thread
+            errors.append(exc)
+            b_built.set()
+            a_released.set()
+
+    def thread_a(name):
+        out[name] = df = registry.QUERIES[name].fn(spark, sf)
+        df.collect()
+        b_built.wait(600)
+        out["a_released"] = util.release()
+        a_released.set()
+
+    def thread_b(name):
+        out[name] = df = registry.QUERIES[name].fn(spark, sf)
+        owned = [f for f, _ in util._owned()]
+        b_built.set()
+        a_released.wait(600)
+        out["b_cached"] = [f.storageLevel != StorageLevel.NONE for f in owned]
+        df.collect()
+        util.release()
+
+    threads = [
+        threading.Thread(target=run, args=("q15_top_supplier", thread_a)),
+        threading.Thread(target=run, args=("dedup_minhash_md5", thread_b)),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(900)
+    assert not any(t.is_alive() for t in threads), "query thread hung"
+    if errors:
+        raise errors[0]
+    assert out["a_released"] >= 1
+    assert out["b_cached"] and all(out["b_cached"]), out["b_cached"]
+    for name in ("q15_top_supplier", "dedup_minhash_md5"):
+        assert_df_matches_duck(out[name], duck, ORACLES[name])
 
 
 def test_window_priority_ordering():
